@@ -215,6 +215,11 @@ def get_spark(app_name: str = "activecube-graphql-spark",
                 os.environ.get("SPARK_GRAFT_WAREHOUSE",
                                "/tmp/spark-graft-warehouse"))
         .config("spark.ui.enabled", "false")
+        # nothing reads the SQL status store (stats.py reads each
+        # queryExecution directly), yet by default it keeps the plan
+        # graph and metrics of the last 1000 executions per session —
+        # heap a long-lived serving process pays for nothing
+        .config("spark.sql.ui.retainedExecutions", "0")
         # same single-thread BLAS pin for real-cluster executors (no-op
         # under local[N], which inherits the driver env set above)
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS",

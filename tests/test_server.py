@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import io
 import json
+import threading
+import time
 
 import pytest
 
@@ -300,3 +302,144 @@ def test_introspection_union_dimension_skips_dunder(spark, sf_dir):
     graphql.assert_valid_schema(schema)
     actor = schema.get_type("EventsRowActor")
     assert "id" in actor.fields and "__typename" not in actor.fields
+
+
+# ------------------------------------------------- concurrent cube fields
+
+THREE_FIELDS = """query {
+  a: sales(returnflag: "R", options: {asc: "linestatus"}) {
+    linestatus count }
+  b: documents(options: {asc: "source"}) { source docs }
+  c: sales(options: {limit: 5, desc: "returnflag"}) { returnflag revenue }
+}"""
+
+
+def _in_group(sc, group: str, fn):
+    """``fn()`` under job group ``group`` → (result, ids of the jobs the
+    SparkContext issued meanwhile)."""
+    jobs = sc._jsc.sc().dagScheduler()
+    sc.setJobGroup(group, "server test")
+    try:
+        lo = jobs.numTotalJobs()
+        out = fn()
+        return out, set(range(lo, jobs.numTotalJobs()))
+    finally:
+        sc._jsc.clearJobGroup()
+
+
+def _group_jobs(sc, group: str) -> set:
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are async
+    return set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _dumps(out: dict) -> str:
+    from activecube_graphql_spark.server import _json_default
+    return json.dumps(out, default=_json_default)
+
+
+def test_field_jobs_run_under_the_callers_job_group(cubes, spark):
+    """Every job a multi-field document launches, on whichever thread,
+    belongs to the caller's job group (per-query cost attribution and
+    group cancellation depend on it), and a pool thread reused by the
+    next request carries nothing of this one."""
+    from activecube_graphql_spark.server import _field_pool
+
+    sc = spark.sparkContext
+    execute(cubes, THREE_FIELDS)  # warm schema memo and plan cache
+    issued = {}
+    for group in ("fields-g", "fields-h"):
+        out, issued[group] = _in_group(
+            sc, group, lambda: execute(cubes, THREE_FIELDS))
+        assert "errors" not in out, out
+        assert len(issued[group]) >= 3  # one collect per cube field
+        assert _group_jobs(sc, group) == issued[group]
+    assert _group_jobs(sc, "fields-g") == issued["fields-g"]
+    pool = _field_pool(sc)
+    if pool is not None:  # every pool thread is back to a clean state
+        barrier = threading.Barrier(pool._max_workers, timeout=60)
+
+        def group_on_pool_thread():
+            barrier.wait()  # one task per thread
+            return sc.getLocalProperty("spark.jobGroup.id")
+        seen = [f.result(timeout=90) for f in
+                [pool.submit(group_on_pool_thread)
+                 for _ in range(pool._max_workers)]]
+        assert seen == [None] * pool._max_workers
+
+
+def test_bad_later_field_fails_before_any_job(cubes, spark):
+    sc = spark.sparkContext
+    good = ('a: sales(returnflag: "R") { linestatus count }'
+            ' b: documents { source docs }')
+    # the first read of a parquet path infers its schema, which is a job
+    assert "errors" not in execute(cubes, "query { %s }" % good)
+    out, issued = _in_group(sc, "fields-failfast", lambda: execute(
+        cubes, "query { %s c: sales(bogus_selector: 1) { count } }" % good))
+    assert out["data"] is None
+    assert "bogus_selector" in out["errors"][0]["message"]
+    assert issued == set()
+    assert _group_jobs(sc, "fields-failfast") == set()
+
+
+def test_first_error_in_document_order_wins(cubes):
+    # the first field fails late (in the option fold), the second early
+    # (at classification), so a completion-order rule would differ
+    first = 'a: sales(options: {limit: "x"}) { count }'
+    second = "b: sales(bogus_selector: 1) { count }"
+    want = execute(cubes, "query { %s }" % first)["errors"]
+    assert want and "bogus_selector" not in want[0]["message"]
+    doc = "query { %s %s }" % (first, second)
+    for _ in range(20):
+        assert execute(cubes, doc) == {"errors": want, "data": None}
+
+
+def test_multi_field_response_is_the_single_fields_merged(cubes):
+    fields = [
+        'x: sales(returnflag: "R", options: {asc: "linestatus"}) '
+        "{ linestatus cnt: count }",
+        "__typename",
+        'y: sales(returnflag: "R", options: {asc: "linestatus"}) '
+        "{ linestatus cnt: count }",
+        'z: documents(options: {desc: "source"}) { source docs }',
+    ]
+    merged: dict = {}
+    for f in fields:
+        out = execute(cubes, "query { %s }" % f)
+        assert "errors" not in out, out
+        merged.update(out["data"])
+    whole = execute(cubes, "query { %s }" % " ".join(fields))
+    assert list(whole["data"]) == ["x", "__typename", "y", "z"]
+    assert _dumps(whole) == _dumps({"data": merged})
+
+
+def test_concurrent_requests_agree_and_finish(cubes):
+    """More callers than the field pool has threads, all queueing field
+    tasks on it at once and sharing each cube's plan cache: nobody
+    hangs and everybody gets the one right answer."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    want = _dumps(execute(cubes, THREE_FIELDS))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(4) as callers:
+            futures = [callers.submit(execute, cubes, THREE_FIELDS)
+                       for _ in range(4)]
+            got = [_dumps(f.result(timeout=300)) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert got == [want] * 4
+
+
+def test_sql_status_store_keeps_no_finished_execution(spark):
+    """``get_spark`` keeps no finished SQL execution in the status
+    store: Spark prunes finished executions when the next one starts,
+    so after two queries at most the last one is left."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    spark.range(3).collect()
+    spark.range(4).collect()
+    deadline = time.monotonic() + 30  # the pruning runs asynchronously
+    while store.executionsCount() > 1 and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert store.executionsCount() <= 1

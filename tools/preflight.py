@@ -14,6 +14,8 @@ Stages (each fails the gate on error):
 5. bench parse — bench.py has written a parseable ``bench_out.json``
    whose query set matches the registry (stale/missing rows flagged;
    does NOT run the 15-minute bench itself).
+6. serving benchmark guards — ``perfbench/test_perfbench.py``, which
+   runs the serving benchmark once (~1 min; skipped with --fast).
 
 Exit 0 = ship it; anything else prints the first failing stage.
 """
@@ -79,6 +81,10 @@ def main() -> None:
         sys.exit(1)
     print(f"bench ok: {len(rec['queries'])} rows, "
           f"suite {rec['value']}s at sf={rec['sf']}")
+
+    if not fast:
+        run("serving benchmark guards",
+            [py, "-m", "pytest", "perfbench/test_perfbench.py", "-q"])
 
     print("\nPREFLIGHT GREEN")
 
