@@ -38,6 +38,7 @@ from typing import Any, Optional
 
 from pyspark.sql import types as T
 
+from .cache import Memo
 from .model import Cube
 
 __all__ = ["schema_data", "resolve_selection", "find_type"]
@@ -275,25 +276,16 @@ class _Builder:
         }
 
 
-#: schema cache per (cube identities, database) — the serving-process
-#: shape: cubes are long-lived (driver_queries._cube), so the one-time
-#: driver-side analysis (~a few hundred ms per cube) is paid once.
-#: The value pins the cube OBJECTS alongside the schema: the key uses
-#: id(), and a GC'd cube's id can be reused by a fresh object with
-#: different metadata — holding the strong ref makes that impossible
-#: while the entry lives (the driver_queries._cube applicationId
-#: lesson, applied to identity keys instead).
-_SCHEMA_CACHE: dict[tuple, tuple] = {}
+#: schema per (cubes, database): long-lived cubes pay the driver-side
+#: analysis (~a few hundred ms per cube) once. ``Cube`` hashes by
+#: identity, so the key itself pins the cubes.
+_SCHEMA_CACHE = Memo()
 
 
 def schema_data(cubes: dict[str, Cube], database: str = "default") -> dict:
-    key = (tuple((n, id(c)) for n, c in cubes.items()), database)
-    hit = _SCHEMA_CACHE.get(key)
-    if hit is None:
-        data = _Builder(cubes, database).build()
-        _SCHEMA_CACHE[key] = (tuple(cubes.values()), data)
-        return data
-    return hit[1]
+    return _SCHEMA_CACHE.get_or_compute(
+        (tuple(cubes.items()), database),
+        lambda: _Builder(cubes, database).build())
 
 
 def find_type(cubes: dict[str, Cube], name: str,

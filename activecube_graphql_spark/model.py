@@ -22,6 +22,7 @@ from typing import Any, Callable, Optional
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .cache import Memo
 from .errors import InputArgumentError, NotSqlExpressible
 from .functions.selector_ops import apply_operator
 
@@ -609,12 +610,9 @@ class Cube:
         #: alternative physical backings (SURVEY §4.3), cheapest-cost wins
         self.representations: list[Representation] = []
         #: compiled-plan cache (R3 — response_builder.rb:27-38 analogue):
-        #: canonical query spec → analyzed DataFrame
-        self.plan_cache: dict[str, DataFrame] = {}
-        #: representation-choice cache: query cache_key → chosen rep name
-        #: (None = raw); the stats-based choice costs two driver-side
-        #: plan analyses, paid once per distinct query
-        self.rep_choice_cache: dict[str, Optional[str]] = {}
+        #: canonical query spec → (analyzed DataFrame, chosen
+        #: representation or None = raw)
+        self.plan_cache = Memo()
 
     def add_representation(self, rep: Representation) -> None:
         self.representations.append(rep)
@@ -741,7 +739,24 @@ class Cube:
               required: Optional[frozenset[str]] = None) -> DataFrame:
         """Backing DataFrame: base fact table plus the star joins in
         ``required`` (None = all). Broadcast hints applied per JoinSpec."""
-        df = self._base_df(database, self.source.read)
+        return self._star_joined(self._base_df(database, self.source.read),
+                                 database, required)
+
+    def stream_table(self, database: str = "default",
+                     required: Optional[frozenset[str]] = None) -> DataFrame:
+        """Streaming twin of :meth:`table`: the base fact arrives as a
+        file stream; star joins become stream-static joins (the static
+        dimension side is broadcast per micro-batch — same plan shape the
+        batch path uses, and the standard cluster-scale layout: the fact
+        stream never shuffles for a dimension lookup)."""
+        return self._star_joined(
+            self._base_df(database, self.source.read_stream),
+            database, required)
+
+    def _star_joined(self, df: DataFrame, database: str,
+                     required: Optional[frozenset[str]]) -> DataFrame:
+        """Join the (static) dimension tables in ``required`` (None =
+        all), closed over their dependencies, onto ``df``."""
         if not self.joins:
             return df
         need = set(required) if required is not None else {j.table for j in self.joins}
@@ -757,33 +772,6 @@ class Cube:
             if j.table not in need:
                 continue
             other = self.source.read(self.spark, database, j.table)
-            if j.broadcast:
-                other = F.broadcast(other)
-            df = df.join(other, on=j.on(), how=j.how)
-        return df
-
-    def stream_table(self, database: str = "default",
-                     required: Optional[frozenset[str]] = None) -> DataFrame:
-        """Streaming twin of :meth:`table`: the base fact arrives as a
-        file stream; star joins become stream-static joins (the static
-        dimension side is broadcast per micro-batch — same plan shape the
-        batch path uses, and the standard cluster-scale layout: the fact
-        stream never shuffles for a dimension lookup)."""
-        df = self._base_df(database, self.source.read_stream)
-        if not self.joins:
-            return df
-        need = set(required) if required is not None else {j.table for j in self.joins}
-        by_name = {j.table: j for j in self.joins}
-        frontier = list(need)
-        while frontier:
-            j = by_name.get(frontier.pop())
-            if j is not None and j.depends_on and j.depends_on not in need:
-                need.add(j.depends_on)
-                frontier.append(j.depends_on)
-        for j in self.joins:
-            if j.table not in need:
-                continue
-            other = self.source.read(self.spark, database, j.table)  # static
             if j.broadcast:
                 other = F.broadcast(other)
             df = df.join(other, on=j.on(), how=j.how)

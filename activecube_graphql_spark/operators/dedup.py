@@ -43,6 +43,8 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import Memo
+
 
 def _skew_threshold(freq: DataFrame, df_col: str, spark,
                     factor: float = 4.0, floor: int = 64) -> int | None:
@@ -170,19 +172,11 @@ def with_shingles(df: DataFrame, text_col: str = "text", n: int = 3,
 _MAX_CANDIDATE_MASS_CONF = "spark.activecube.jaccard.maxCandidateMass"
 _MAX_CANDIDATE_MASS_DEFAULT = 2e9
 
-#: session-scoped Σdf² memo keyed on the freq frame's normalized
-#: analyzed-plan fingerprint (r16, VERDICT r15 item 8): the guard's
-#: aggregate is one tiny job, but it re-ran on EVERY call over the
-#:  same corpus in interactive sessions — the fingerprint is exactly
-#: the "same computation" identity the manifest already trusts, so a
-#: repeat call answers from the memo without launching a job. Bounded
-#: FIFO (128 entries ≈ a long interactive session; eviction order is
-#: irrelevant for a pure cache).
-_MASS_MEMO: dict[str, float] = {}
-_MASS_MEMO_CAP = 128
-#: auto-router strategy decisions, same keying discipline as _MASS_MEMO
-#: (analyzed-plan fingerprint + leaf input files — stale-proof)
-_ROUTE_MEMO: dict[str, str] = {}
+#: Σdf² guard aggregates and auto-router decisions, keyed on the
+#: analyzed-plan fingerprint (the "same computation" identity the
+#: manifest trusts) plus the leaf input files (r16, VERDICT r15 item 8)
+_MASS_MEMO = Memo()
+_ROUTE_MEMO = Memo()
 
 
 def _guard_exact_join_mass(freq: DataFrame, count_col: str,
@@ -196,9 +190,7 @@ def _guard_exact_join_mass(freq: DataFrame, count_col: str,
     job — the docstrings' "prefer minhash at scale" guidance, made
     mechanical. Pass ``max_candidate_mass=float('inf')`` to run
     anyway (oracle duty on a corpus you have measured). The aggregate
-    memoizes per analyzed-plan fingerprint for the session (stale
-    entries are impossible: a different corpus or upstream edit is a
-    different plan, hence a different key)."""
+    memoizes (``_MASS_MEMO``)."""
     if max_candidate_mass is None:
         max_candidate_mass = float(spark.conf.get(
             _MAX_CANDIDATE_MASS_CONF,
@@ -212,14 +204,9 @@ def _guard_exact_join_mass(freq: DataFrame, count_col: str,
     # set joins the key (a listing, not a job)
     files = ",".join(sorted(freq.inputFiles()))
     key = plan_fingerprint(freq) + "|" + count_col + "|" + files
-    mass = _MASS_MEMO.get(key)
-    if mass is None:
-        mass = float(freq.agg(
-            F.sum(F.col(count_col).cast("double") * F.col(count_col))
-            .alias("m")).first()["m"] or 0.0)
-        if len(_MASS_MEMO) >= _MASS_MEMO_CAP:
-            _MASS_MEMO.pop(next(iter(_MASS_MEMO)))
-        _MASS_MEMO[key] = mass
+    mass = _MASS_MEMO.get_or_compute(key, lambda: float(freq.agg(
+        F.sum(F.col(count_col).cast("double") * F.col(count_col))
+        .alias("m")).first()["m"] or 0.0))
     if mass > max_candidate_mass:
         raise ValueError(
             f"{what}: projected exact-join candidate mass "
@@ -331,18 +318,15 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
         # the sketch's tail margin before the guard compares: an HLL
         # underestimate must not admit an over-cap bitmap.
         #
-        # The DECISION memoizes per analyzed-plan fingerprint + leaf
-        # input-file set (the _guard_exact_join_mass discipline — stale
-        # entries impossible: a different corpus or upstream edit is a
-        # different key): re-running the same pipeline in one session
-        # re-probed three aggregates per call, ~0.8 s of the warm
-        # ngram_jaccard row at sf0.1 (r16 measurement) for a strategy
-        # that cannot have changed.
+        # The DECISION memoizes (_ROUTE_MEMO): re-running the same
+        # pipeline re-probed three aggregates per call, ~0.8 s of the
+        # warm ngram_jaccard row at sf0.1 (r16 measurement).
         from ..plans.fingerprint import plan_fingerprint
         route_key = (plan_fingerprint(inv) + "|route|"
                      + ",".join(sorted(inv.inputFiles())))
-        strategy = _ROUTE_MEMO.get(route_key)
-        if strategy is None:
+
+        def route() -> str:
+            nonlocal vocab_terms, rows_to_flops
             vocab_size = int(inv.agg(
                 F.approx_count_distinct("shingle", 0.02).alias("v"))
                 .first()["v"] / 0.9)
@@ -395,10 +379,9 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
                             and bitmap_flops <= rows_to_flops * sum_df2)
                 if eligible:
                     vocab_terms = sorted(r["shingle"] for r in dfreq_rows)
-            strategy = "bitmap" if eligible else "index"
-            if len(_ROUTE_MEMO) >= _MASS_MEMO_CAP:
-                _ROUTE_MEMO.pop(next(iter(_ROUTE_MEMO)))
-            _ROUTE_MEMO[route_key] = strategy
+            return "bitmap" if eligible else "index"
+
+        strategy = _ROUTE_MEMO.get_or_compute(route_key, route)
     from ..stats import record_routing
     record_routing("ngram_jaccard.strategy", strategy)
 

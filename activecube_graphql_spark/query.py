@@ -446,18 +446,17 @@ class CubeQueryBuilder:
         analysis, no job), take the smallest. A rollup 100× smaller than
         the fact table therefore still LOSES to raw when the query's
         filter prunes raw to one partition but can't prune the rollup.
-        Falls back to declared static costs when stats are unavailable."""
+        Falls back to declared static costs when stats are unavailable.
+        A query already in the plan cache answers from its entry: the
+        representation its cached DataFrame was compiled against."""
+        if self._use_cache and self.cache_key() in self.cube.plan_cache:
+            return self._cached()[1]
         dims, mets, sels = self.element_names()
         candidates = self.cube.covering_representations(dims, mets, sels)
         if not candidates:
             return None
         if self.cube.representation_choice == "static":
             return self.cube.choose_representation(dims, mets, sels)
-        ckey = self.cache_key()
-        if ckey in self.cube.rep_choice_cache:
-            chosen_name = self.cube.rep_choice_cache[ckey]
-            return next((r for r in candidates if r.name == chosen_name),
-                        None)
         try:
             raw_bytes = self.cube.plan_size_bytes(self._filtered(
                 self.cube.table(self.database,
@@ -473,37 +472,30 @@ class CubeQueryBuilder:
                 for rep, b in scored:
                     if b < best_bytes:
                         best, best_bytes = rep, b
-                self.cube.rep_choice_cache[ckey] = \
-                    best.name if best is not None else None
                 return best
         except Exception:
             # estimation must never break compilation — but don't hide the
-            # estimator bug, and don't re-pay two driver-side plan
-            # analyses per compile: log once, cache the static fallback.
+            # estimator bug: log it and use the static fallback (the plan
+            # cache keeps the choice, so a repeat query doesn't re-pay it)
             import logging
             logging.getLogger(__name__).warning(
                 "representation size estimation failed for %s; using the "
                 "statically declared costs", self.cube.name, exc_info=True)
-        static = self.cube.choose_representation(dims, mets, sels)
-        self.cube.rep_choice_cache[ckey] = \
-            static.name if static is not None else None
-        return static
+        return self.cube.choose_representation(dims, mets, sels)
 
     def df(self) -> DataFrame:
         """Compile to a DataFrame: pick representation → filter → groupBy
         (slices) → agg(measures) → ordered option fold → transform hooks.
         No-slice queries produce a single global row (P4); no-measure
         queries a DISTINCT projection."""
-        key = self.cache_key()
-        if self._use_cache and key in self.cube.plan_cache:
-            out = self.cube.plan_cache[key]
-        else:
-            out = self._compile()
-            if self._use_cache:
-                self.cube.plan_cache[key] = out
+        out = self._cached()[0] if self._use_cache else self._compile()[0]
         for fn in self._transforms:
             out = fn(out)
         return out
+
+    def _cached(self) -> tuple[DataFrame, Optional[Representation]]:
+        return self.cube.plan_cache.get_or_compute(self.cache_key(),
+                                                   self._compile)
 
     def _slice_cols(self, resolver) -> list:
         cols = []
@@ -565,7 +557,7 @@ class CubeQueryBuilder:
             out = fn(out)
         return out
 
-    def _compile(self) -> DataFrame:
+    def _compile(self) -> tuple[DataFrame, Optional[Representation]]:
         rep = self.chosen_representation()
         if rep is not None:
             resolver = rep
@@ -616,7 +608,7 @@ class CubeQueryBuilder:
         state = _FoldState(order=[])
         for name, args in self._options:
             out = _OPTION_APPLIERS[name](out, args, state)
-        return out
+        return out, rep
 
     def to_sql(self) -> str:
         """Print this query as one ANSI-SQL statement over the raw star

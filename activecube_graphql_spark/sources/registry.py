@@ -26,46 +26,23 @@ from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..cache import Memo, file_identity
 from ..errors import InputArgumentError
 from ..session import ensure_runtime_confs
 
-#: (abspath, size, mtime_ns) → StructType. `spark.read.parquet` runs a
-#: one-task footer-inference JOB on every call — the r17 jobs-per-build
-#: sweep found it on ~100 registry rows × every build (4 builds per
-#: bench row). The memo stores the inferred SCHEMA — metadata, a
-#: decision, never data — with a stale-proof key (file identity by
-#: size+mtime), the same discipline as the dedup route memos; passing
-#: it back via ``.schema()`` skips the job while producing the
-#: byte-identical analyzed plan (fingerprint-verified: normalization
-#: already strips the exprIds that are the only difference). Bounded:
-#: one entry per distinct parquet path ever read in the session.
-_PARQUET_SCHEMA_MEMO: dict[tuple, object] = {}
-
-
-def _parquet_file_key(path: str) -> tuple | None:
-    """Stale-proof identity of a parquet file or directory, or None
-    when it can't be stat'd (fall back to plain inference)."""
-    try:
-        st = os.stat(path)
-    except OSError:
-        return None
-    return (os.path.abspath(path), st.st_size, st.st_mtime_ns)
+#: file identity → inferred schema. `spark.read.parquet` runs a footer-
+#: inference JOB per call (r17: ~100 rows × every build); ``.schema()``
+#: skips it with a byte-identical analyzed plan (fingerprint-verified).
+_PARQUET_SCHEMA_MEMO = Memo()
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet`` with the per-path schema memo: first read
-    of a path infers (one job), every later build passes the memoized
-    schema and skips the inference job. Results and analyzed-plan
-    fingerprints are identical by construction — the schema IS the one
-    inference yields for the same bytes."""
-    key = _parquet_file_key(path)
+    """``spark.read.parquet`` that infers a file's schema once."""
+    key = file_identity(path)
     if key is None:
         return spark.read.parquet(path)
-    schema = _PARQUET_SCHEMA_MEMO.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _PARQUET_SCHEMA_MEMO[key] = df.schema
-        return df
+    schema = _PARQUET_SCHEMA_MEMO.get_or_compute(
+        key, lambda: spark.read.parquet(path).schema)
     return spark.read.schema(schema).parquet(path)
 
 

@@ -51,8 +51,8 @@ def execute(builder, headers: Optional[dict] = None):
     """Run a CubeQueryBuilder and return (rows, ExecutionStats) — the
     analogue of ``cube_query.stats= / headers= ; cube_query.query``
     (cube_field.rb:49-53)."""
-    rep = builder.chosen_representation()
     df = builder.df()
+    rep = builder.chosen_representation()  # from df()'s plan-cache entry
     t0 = time.perf_counter()
     rows = df.collect()
     wall = time.perf_counter() - t0
