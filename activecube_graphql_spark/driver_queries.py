@@ -1825,57 +1825,37 @@ _WARC_URL_SYNTH = ("concat('HTTP://WWW.', source, '-Site.CO.UK:80/warc/',"
                    " TO_STR(doc_id), '?b=2&a=1#Frag')")
 
 
-def _warc_assets(spark, sf_dir):
-    """Deterministic WARC member per document (r14, VERDICT r13
-    item 4): warcinfo + request + response records through the real
-    encoder (operators/warc.encode_warc). The request record's body
-    deliberately contains `WARC/1.0` magic and CRLF-CRLF sequences —
-    a parser that splits on magic or blank lines instead of walking
-    Content-Length mis-frames the member and the oracle catches it.
-    The response body is the SAME engine-side _HTML_SYNTH page as the
-    html_extract row, so no text logic is duplicated in Python."""
-    import pandas as _pd
-
+def _warc_base(spark, sf_dir):
+    """The per-document columns a WARC member is built from: id,
+    source, the synthesized url and the engine-side _HTML_SYNTH page."""
     from .functions.portable import render as _render
-    from .operators import warc as W
 
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
-    base = docs.selectExpr(
+    return docs.selectExpr(
         "doc_id", "source",
         _render(_WARC_URL_SYNTH, "spark") + " AS url",
         _render(_HTML_SYNTH, "spark") + " AS html")
 
+
+def _warc_assets(spark, sf_dir):
+    """Deterministic WARC member per document (r14, VERDICT r13
+    item 4), built by ``warc.fixture_member``. The response body is the
+    SAME engine-side _HTML_SYNTH page as the html_extract row, so no
+    text logic is duplicated in Python."""
+    import pandas as _pd
+
+    from .operators import warc as W
+
     def gen(batches):
         for pdf in batches:
-            ids, srcs, payloads = [], [], []
-            for i in range(len(pdf)):
-                doc_id = int(pdf["doc_id"].iloc[i])
-                url = str(pdf["url"].iloc[i])
-                html = str(pdf["html"].iloc[i])
-                request = (b"GET /warc HTTP/1.1\r\nHost: decoy\r\n\r\n"
-                           b"WARC/1.0\r\nWARC-Type: response\r\n"
-                           b"Content-Length: 0\r\n\r\n\r\n\r\ndecoy")
-                response = (b"HTTP/1.1 200 OK\r\n"
-                            b"Content-Type: text/html\r\n"
-                            b"Server: synth\r\n\r\n" + html.encode())
-                payload = W.encode_warc([
-                    {"type": "warcinfo",
-                     "payload": b"software: acgs-warc-fixture\r\n"
-                                b"format: WARC file version 1.0\r\n",
-                     "content_type": "application/warc-fields"},
-                    {"type": "request", "uri": url, "payload": request,
-                     "content_type": "application/http;msgtype=request"},
-                    {"type": "response", "uri": url, "payload": response,
-                     "content_type": "application/http;msgtype=response"},
-                ])
-                ids.append(doc_id)
-                srcs.append(str(pdf["source"].iloc[i]))
-                payloads.append(payload)
-            yield _pd.DataFrame({"doc_id": ids, "source": srcs,
+            payloads = [W.fixture_member(str(url), str(html))
+                        for url, html in zip(pdf["url"], pdf["html"])]
+            yield _pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
+                                 "source": pdf["source"].astype(str),
                                  "payload": payloads})
 
-    return base.mapInPandas(gen,
-                            "doc_id long, source string, payload binary")
+    return _warc_base(spark, sf_dir).mapInPandas(
+        gen, "doc_id long, source string, payload binary")
 
 
 def _warc_extracted_synth(spark, sf_dir):
@@ -1886,22 +1866,15 @@ def _warc_extracted_synth(spark, sf_dir):
     crossed Python→JVM→Python between them.  This kernel builds the
     member bytes AND walks them in the same invocation — the payload
     never crosses the boundary at all — by calling the SAME kernels
-    (``encode_warc``; the shared ``response_records`` walk;
+    (``fixture_member``; the shared ``response_records`` walk;
     ``htmltext.extract_text``), so rows are identical to the chained
     form (pinned in tests/test_warc.py).  The WARC encoder and parser
     both still run on every member: nothing is faked, only the
     transport is gone."""
     import pandas as _pd
 
-    from .functions.portable import render as _render
     from .operators import warc as W
     from .operators.htmltext import extract_text
-
-    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
-    base = docs.selectExpr(
-        "doc_id", "source",
-        _render(_WARC_URL_SYNTH, "spark") + " AS url",
-        _render(_HTML_SYNTH, "spark") + " AS html")
 
     def gen_extract(batches):
         for pdf in batches:
@@ -1909,31 +1882,14 @@ def _warc_extracted_synth(spark, sf_dir):
                 "doc_id": [], "source": [], "url": [], "status": [],
                 "n_records": [], "text": [], "n_blocks": [],
                 "n_kept": []}
-            for i in range(len(pdf)):
-                doc_id = int(pdf["doc_id"].iloc[i])
-                url = str(pdf["url"].iloc[i])
-                html = str(pdf["html"].iloc[i])
-                request = (b"GET /warc HTTP/1.1\r\nHost: decoy\r\n\r\n"
-                           b"WARC/1.0\r\nWARC-Type: response\r\n"
-                           b"Content-Length: 0\r\n\r\n\r\n\r\ndecoy")
-                response = (b"HTTP/1.1 200 OK\r\n"
-                            b"Content-Type: text/html\r\n"
-                            b"Server: synth\r\n\r\n" + html.encode())
-                payload = W.encode_warc([
-                    {"type": "warcinfo",
-                     "payload": b"software: acgs-warc-fixture\r\n"
-                                b"format: WARC file version 1.0\r\n",
-                     "content_type": "application/warc-fields"},
-                    {"type": "request", "uri": url, "payload": request,
-                     "content_type": "application/http;msgtype=request"},
-                    {"type": "response", "uri": url, "payload": response,
-                     "content_type": "application/http;msgtype=response"},
-                ])
+            for doc_id, source, url, html in zip(
+                    pdf["doc_id"], pdf["source"], pdf["url"], pdf["html"]):
+                payload = W.fixture_member(str(url), str(html))
                 for r_url, status, n_recs, body in W.response_records(
                         payload):
                     r = extract_text(body.decode("utf-8", "replace"))
-                    rows["doc_id"].append(doc_id)
-                    rows["source"].append(str(pdf["source"].iloc[i]))
+                    rows["doc_id"].append(int(doc_id))
+                    rows["source"].append(str(source))
                     rows["url"].append(r_url)
                     rows["status"].append(status)
                     rows["n_records"].append(n_recs)
@@ -1942,7 +1898,7 @@ def _warc_extracted_synth(spark, sf_dir):
                     rows["n_kept"].append(r["n_kept"])
             yield _pd.DataFrame(rows)
 
-    return base.mapInPandas(
+    return _warc_base(spark, sf_dir).mapInPandas(
         gen_extract, "doc_id long, source string, url string, "
                      "status int, n_records int, text string, "
                      "n_blocks int, n_kept int")

@@ -1868,8 +1868,6 @@ def train_lang_id(docs: DataFrame, label_col: str = "lang",
     tie-breaks, no sampling."""
     import math
 
-    from pyspark.sql import Window
-
     grams = (docs
              .select(F.col(label_col).alias("y"),
                      F.explode(F.expr(
@@ -1882,10 +1880,11 @@ def train_lang_id(docs: DataFrame, label_col: str = "lang",
     # the KN-globals union-fold discipline): the former three eager
     # jobs per build (vocab-cut collect, isin-filtered gram collect,
     # priors collect) fold into a single tagged-union action. The
-    # vocab cut moves engine-side as a rank window over the gram
-    # totals — row_number over (Σc DESC, g ASC) ≤ max_features selects
-    # the IDENTICAL set the old orderBy().limit() collected (same
-    # deterministic total order, both exact integer sums) — and the
+    # vocab cut stays engine-side as a top-k over the gram totals:
+    # orderBy(Σc DESC, g ASC).limit(max_features) below a join plans
+    # as TakeOrderedAndProject, a per-task partial top-k merged on
+    # max_features × tasks rows (never one task sorting every distinct
+    # gram, as a partition-less rank window would), and the
     # kept (y, g, c) rows union the per-lang priors, tagged. The
     # driver still only ever sees max_features × n_langs + n_langs
     # rows, and _fit_lang_nb re-derives the same top-set from the
@@ -1893,10 +1892,9 @@ def train_lang_id(docs: DataFrame, label_col: str = "lang",
     # totals), so the model is bit-identical to the three-job form
     # (pinned by the replica bit-identity assert in tests/
     # test_pipeline_ops.py::test_lang_id_trained_multilingual_column).
-    w = Window.orderBy(F.col("t").desc(), F.col("g").asc())
     keep = (grams.groupBy("g").agg(F.sum("c").alias("t"))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= max_features)
+            .orderBy(F.col("t").desc(), F.col("g").asc())
+            .limit(max_features)
             .select("g"))
     tagged = (grams.join(keep, "g")
               .select(F.lit(0).alias("s"), "y", "g", "c")

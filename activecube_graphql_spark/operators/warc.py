@@ -89,6 +89,30 @@ def encode_warc(records: Iterable[dict]) -> bytes:
     return bytes(out)
 
 
+def fixture_member(url: str, html: str) -> bytes:
+    """The graded fixture's WARC member for one page: warcinfo +
+    request + response records. The request body deliberately carries
+    ``WARC/1.0`` magic and CRLF-CRLF sequences: a parser that splits on
+    magic or blank lines instead of walking Content-Length mis-frames
+    the member and the oracle catches it."""
+    request = (b"GET /warc HTTP/1.1\r\nHost: decoy\r\n\r\n"
+               b"WARC/1.0\r\nWARC-Type: response\r\n"
+               b"Content-Length: 0\r\n\r\n\r\n\r\ndecoy")
+    response = (b"HTTP/1.1 200 OK\r\n"
+                b"Content-Type: text/html\r\n"
+                b"Server: synth\r\n\r\n" + html.encode())
+    return encode_warc([
+        {"type": "warcinfo",
+         "payload": b"software: acgs-warc-fixture\r\n"
+                    b"format: WARC file version 1.0\r\n",
+         "content_type": "application/warc-fields"},
+        {"type": "request", "uri": url, "payload": request,
+         "content_type": "application/http;msgtype=request"},
+        {"type": "response", "uri": url, "payload": response,
+         "content_type": "application/http;msgtype=response"},
+    ])
+
+
 def parse_warc(data: bytes) -> list[dict]:
     """Walk a WARC member by declared Content-Length.
 

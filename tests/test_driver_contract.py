@@ -80,16 +80,14 @@ def _recorded_green() -> set[str]:
 
 
 @pytest.fixture(scope="module")
-def plan_fps(spark):
+def plan_fps(registry):
     """Current-tree plan fingerprints for every row whose manifest entry
-    carries one (computed once; ~0.4 s/row at sf0.001)."""
+    carries one, over the session's one registry build (sf0.001)."""
     manifest = json.load(open(MANIFEST))
-    fps: dict[str, str] = {}
-    for name, fn in QUERIES.items():
-        entry = manifest.get(name)
-        if isinstance(entry, dict) and "plan" in entry:
-            fps[name] = plan_fingerprint(fn(spark, SF_FP))
-    return fps
+    return {name: plan_fingerprint(row.df)
+            for name, row in registry.items()
+            if isinstance(manifest.get(name), dict)
+            and "plan" in manifest[name]}
 
 
 def _latest_round_green() -> set[str]:

@@ -4,17 +4,20 @@
 
 Stages (each fails the gate on error):
 
-1. pytest — the full suite (skipped with --fast).
+1. pytest — the full suite; with --fast only the registry plan sweep
+   (``tests/test_plans.py::test_registry_plan_invariants``, ~1-2 min:
+   every row's plan and build-time actions against the rule table).
 2. entry smoke — ``entry(spark)`` on a BARE session at sf0.001
    (the driver's own harness builds the session, not us).
 3. result-dtype audit — Spark vs DuckDB physical column types for every
    oracle-bearing row at sf0.001 (the r03/r04 HUGEINT hash-fail class).
-4. oracle verify — bit-exact value multisets for the FULL registry at
+4. ULP margin gate — ANN/MMR decision boundaries at the grading SFs.
+5. oracle verify — bit-exact value multisets for the FULL registry at
    sf0.01 on a bare session (the driver's grading scale + session).
-5. bench parse — bench.py has written a parseable ``bench_out.json``
+6. bench parse — bench.py has written a parseable ``bench_out.json``
    whose query set matches the registry (stale/missing rows flagged;
    does NOT run the 15-minute bench itself).
-6. serving benchmark guards — ``perfbench/test_perfbench.py``, which
+7. serving benchmark guards — ``perfbench/test_perfbench.py``, which
    runs the serving benchmark once (~1 min; skipped with --fast).
 
 Exit 0 = ship it; anything else prints the first failing stage.
@@ -42,7 +45,11 @@ def main() -> None:
     fast = "--fast" in sys.argv
     py = sys.executable
 
-    if not fast:
+    if fast:
+        run("registry plan sweep", [
+            py, "-m", "pytest",
+            "tests/test_plans.py::test_registry_plan_invariants", "-q"])
+    else:
         run("pytest", [py, "-m", "pytest", "tests/", "-q"])
 
     run("entry smoke (bare session, sf0.001)", [py, "-c", (
