@@ -755,12 +755,22 @@ class Cube:
 
     def _star_joined(self, df: DataFrame, database: str,
                      required: Optional[frozenset[str]]) -> DataFrame:
-        """Join the (static) dimension tables in ``required`` (None =
-        all), closed over their dependencies, onto ``df``."""
-        if not self.joins:
-            return df
+        """Join the (static) dimension tables of :meth:`star_joins` onto
+        ``df``."""
+        for j in self.star_joins(required):
+            other = self.source.read(self.spark, database, j.table)
+            if j.broadcast:
+                other = F.broadcast(other)
+            df = df.join(other, on=j.on(), how=j.how)
+        return df
+
+    def star_joins(self, required: Optional[frozenset[str]]
+                   ) -> list[JoinSpec]:
+        """The joins in ``required`` (None = all), closed over their
+        dependencies (region needs nation, etc.), in declaration order —
+        which respects dependencies. Shared by :meth:`table` and the SQL
+        printer's FROM clause."""
         need = set(required) if required is not None else {j.table for j in self.joins}
-        # close over dependencies (region needs nation, etc.)
         by_name = {j.table: j for j in self.joins}
         frontier = list(need)
         while frontier:
@@ -768,14 +778,7 @@ class Cube:
             if j is not None and j.depends_on and j.depends_on not in need:
                 need.add(j.depends_on)
                 frontier.append(j.depends_on)
-        for j in self.joins:  # declaration order respects dependencies
-            if j.table not in need:
-                continue
-            other = self.source.read(self.spark, database, j.table)
-            if j.broadcast:
-                other = F.broadcast(other)
-            df = df.join(other, on=j.on(), how=j.how)
-        return df
+        return [j for j in self.joins if j.table in need]
 
     def query(self, database: str = "default"):
         from .query import CubeQueryBuilder

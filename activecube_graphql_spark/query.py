@@ -13,12 +13,19 @@ Reference semantics replicated (SURVEY §2, §3):
 * a nil argument under a non-null-aware operator silently drops the
   predicate (parse_tree.rb:153,158-160).
 
-The builder is **declarative**: ``slice``/``measure``/``when`` validate
-eagerly (fail-fast, parse_tree.rb:30,33) but store only specs; Columns are
-materialized at ``df()`` against the chosen *representation* — the raw
-star schema or the cheapest covering pre-aggregation (SURVEY §4.3). That
-late binding is what makes aggregate-table selection and the compiled-plan
-cache (R3) possible.
+The builder is **declarative**: ``slice``/``measure``/``when``/``option``
+validate eagerly (fail-fast, parse_tree.rb:30,33) and store only specs.
+Selector arguments are parsed exactly once, on entry, by
+:func:`parse_filter` into a :class:`Filter` (AND-lists of
+``(selector, op, value)`` terms plus ``any:`` OR-groups); options are
+parsed once by ``_OPTION_PARSERS`` (path keys, ints, ``limit_by``
+triples). Every consumer reads only those parsed forms: the compiler,
+``stream_df``, element names / join pruning, the plan-cache key and the
+SQL printer (sql.py), which keeps its own emission of each operator,
+metric and option. Columns are materialized at ``df()`` against the
+chosen *representation* — the raw star schema or the cheapest covering
+pre-aggregation (SURVEY §4.3). That late binding is what makes
+aggregate-table selection and the compiled-plan cache (R3) possible.
 
 Compilation is declarative end-to-end: ``filter → groupBy → agg →
 (ordered option fold)`` on DataFrames, so Catalyst performs predicate
@@ -31,9 +38,11 @@ window + ``row_number`` pattern that Spark ≥3.5 rewrites to
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 from dataclasses import dataclass, field
-from typing import Any, Callable, Optional
+from typing import Any, Callable, NamedTuple, Optional
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -72,13 +81,10 @@ def _check_injection(value: Any) -> Any:
 
 
 def _any_groups(value: Any) -> list[dict]:
-    """F6 payload normalization, shared by every ``any:`` consumer
-    (validate / element-names / predicate / SQL printer): the payload is
-    a LIST of predicate-group hashes. ``None`` nil-drops to zero groups
-    (the F5 rule, parse_tree.rb:158-160); a bare hash is accepted as a
-    one-group list; anything else fails fast — fuzzing found the
-    un-normalized sites leaking AttributeError/TypeError on malformed
-    payloads instead of the engine's input error."""
+    """F6 payload normalization: the payload is a LIST of predicate-group
+    hashes. ``None`` nil-drops to zero groups (the F5 rule,
+    parse_tree.rb:158-160); a bare hash is accepted as a one-group list;
+    anything else fails fast with the engine's input error."""
     if value is None:
         return []
     if isinstance(value, dict):
@@ -91,34 +97,99 @@ def _any_groups(value: Any) -> list[dict]:
         f"{type(value).__name__}: {value!r}")
 
 
-def _drop_nil_ops(grp: dict) -> dict:
-    """The reference's any:-group nil rule (parse_tree.rb:177 ``unless
-    arg.nil?``): EVERY nil-valued operator inside an ``any:`` group is
-    dropped — including the null-aware ``is``/``not`` ops that the
-    direct selector path keeps (:158-160). Only used under
-    ``strict_reference_compat``; nested ``any:`` payloads pass through
-    (the recursive ``_predicate`` call applies the same rule a level
-    down)."""
-    out: dict = {}
+def _camelized(grp: dict, selectors) -> dict:
+    """Reference parity (parse_tree.rb:170): attr names inside ``any:``
+    selector groups are lowerCamelized before cube lookup, so a
+    snake_case attr resolves a camelCase selector. Exact names win;
+    the camelized form is a FALLBACK only (applied when the exact key
+    is absent), so cubes with snake_case selectors are unaffected.
+    A group naming BOTH spellings of one selector is rejected —
+    last-write-wins would silently drop one predicate, and losing a
+    filter conjunct is the worst possible failure mode."""
+    out = {}
     for k, v in grp.items():
-        if k == "any":
-            out[k] = v
-            continue
-        if v is None:
-            continue
-        if isinstance(v, dict):
-            v = {op: val for op, val in v.items() if val is not None}
-            if not v:
-                continue
-        elif isinstance(v, (list, tuple)) and v \
-                and all(isinstance(h, dict) for h in v):
-            v = [h2 for h in v
-                 for h2 in [{op: val for op, val in h.items()
-                             if val is not None}] if h2]
-            if not v:
-                continue
+        if k != "any" and k not in selectors:
+            ck = _camelize_lower(k)
+            if ck in selectors:
+                if ck in grp or ck in out:
+                    raise InputArgumentError(
+                        f"any: group names selector '{ck}' more "
+                        f"than once (directly or via '{k}') — one "
+                        "predicate would be silently dropped")
+                k = ck
         out[k] = v
     return out
+
+
+class Term(NamedTuple):
+    """One parsed predicate: ``selector`` compared by ``op`` to ``value``."""
+    selector: str
+    op: str
+    value: Any
+
+
+class AnyOf(NamedTuple):
+    """A parsed ``any:`` payload: OR of AND-groups of Term | AnyOf."""
+    groups: tuple
+
+
+class Filter(NamedTuple):
+    """One parsed ``when()`` / ``where=`` argument spec."""
+    #: Term | AnyOf, ANDed in written order
+    terms: tuple
+    #: every selector the spec names, nil-dropped ones included — join
+    #: pruning and representation coverage read these
+    selectors: tuple
+
+
+def parse_filter(cube: Cube, args: dict) -> Filter:
+    """The one pass over the selector-argument grammar (parse_tree.rb:
+    111-195). Rejects injected path keys, unknown selectors and unknown
+    operators; camelizes ``any:`` group names; drops nil predicates.
+
+    * scalar value            → eq shorthand          (F1, parse_tree.rb:124-125)
+    * {op: val, ...} hash     → AND of operator pairs (F2, :121-122,149-156)
+    * [scalars]               → IN list               (F3, :185-195)
+    * [{...}, {...}]          → AND of hashes         (F4, :187-190)
+    * nil under a non-null op → dropped               (F5, :153,158-160)
+    * any: [grp, grp, ...]    → OR of AND-groups      (F6, :117-118,162-183)
+
+    A scalar ``in``/``not_in`` value becomes a one-element list (GraphQL
+    list input coercion)."""
+    _check_injection(args)
+    names: dict[str, None] = {}
+    return Filter(_parse_terms(cube, args, names), tuple(names))
+
+
+def _parse_terms(cube: Cube, args: dict, names: dict) -> tuple:
+    terms: list = []
+    for attr, value in args.items():
+        if attr == "any":
+            terms.append(AnyOf(tuple(
+                _parse_terms(cube, _camelized(grp, cube.selectors), names)
+                for grp in _any_groups(value))))
+            continue
+        cube.selector(attr)  # raises on unknown
+        names[attr] = None
+        if isinstance(value, dict):
+            pairs = list(value.items())
+        elif isinstance(value, (list, tuple)) and value \
+                and all(isinstance(v, dict) for v in value):
+            pairs = [p for h in value for p in h.items()]
+        elif isinstance(value, (list, tuple)):
+            pairs = [("in", list(value))]
+        else:
+            pairs = [("eq", value)]
+        for op, v in pairs:
+            if op not in OPERATORS:
+                raise InputArgumentError(
+                    f"Unsupported selector operator '{op}'")
+            if not applicable_operator(op, v):
+                continue
+            if op in ("in", "not_in") and not isinstance(v, (list, tuple)):
+                v = [v]
+            terms.append(Term(attr, op, v))
+    return tuple(terms)
 
 
 @dataclass
@@ -132,7 +203,7 @@ class _SliceSpec:
 class _MeasureSpec:
     key: str
     metric: str
-    where: Optional[dict]
+    where: Optional[Filter]
 
 
 class CubeQueryBuilder:
@@ -144,11 +215,11 @@ class CubeQueryBuilder:
         self.database = database
         self._slices: list[_SliceSpec] = []
         self._measures: list[_MeasureSpec] = []
-        self._filters: list[dict] = []
+        self._filters: list[Filter] = []
         self._options: list[tuple[str, Any]] = []
         self._transforms: list[Callable[[DataFrame], DataFrame]] = []
         self._grouping_mode: str = "groupby"
-        self._grouping_sets: Optional[list[list[str]]] = None
+        self._grouping_sets: Optional[list[tuple[str, ...]]] = None
         self._use_cache: bool = True
         self._strict_ref_compat: bool = False
 
@@ -174,17 +245,16 @@ class CubeQueryBuilder:
         parse_tree.rb:88 apply_args)."""
         for name in names:
             self.cube.metric(name)  # fail-fast
-            if where:
-                self._validate_args(where)
+        parsed = parse_filter(self.cube, where) if where else None
+        for name in names:
             key = PATH_PREFIX + (alias or name)
-            self._measures.append(_MeasureSpec(key, name, where))
+            self._measures.append(_MeasureSpec(key, name, parsed))
         return self
 
     def when(self, args: dict) -> "CubeQueryBuilder":
         """Cube-level filter from selector arguments (parse_tree.rb:111-135).
-        Supports the full argument grammar F1-F6 (see ``_predicate``)."""
-        self._validate_args(args)
-        self._filters.append(args)
+        Supports the full argument grammar F1-F6 (see ``parse_filter``)."""
+        self._filters.append(parse_filter(self.cube, args))
         return self
 
     def option(self, name: str, args: Any = None) -> "CubeQueryBuilder":
@@ -199,9 +269,10 @@ class CubeQueryBuilder:
                 return self.grouping(args.get("mode", "groupby"),
                                      sets=args.get("sets"))
             return self.grouping(args)
-        if name not in _OPTION_APPLIERS:
+        if name not in _OPTION_PARSERS:
             raise InputArgumentError(f"Option '{name}' is not supported")
-        self._options.append((name, _check_injection(args)))
+        self._options.append(
+            (name, _OPTION_PARSERS[name](_check_injection(args))))
         return self
 
     # convenience sugar
@@ -241,7 +312,7 @@ class CubeQueryBuilder:
             if not sets:
                 raise InputArgumentError(
                     "grouping('sets') requires sets=[[name, ...], ...]")
-            self._grouping_sets = [list(s) for s in sets]
+            self._grouping_sets = [_path_keys(s) for s in sets]
         self._grouping_mode = mode
         return self
 
@@ -268,67 +339,11 @@ class CubeQueryBuilder:
         self._strict_ref_compat = bool(on)
         return self
 
-    # ------------------------------------------------------- validation
-    def _normalize_any_group(self, grp: dict, selectors) -> dict:
-        """Reference parity (parse_tree.rb:170): attr names inside ``any:``
-        selector groups are lowerCamelized before cube lookup, so a
-        snake_case attr resolves a camelCase selector. Exact names win;
-        the camelized form is a FALLBACK only (applied when the exact key
-        is absent), so cubes with snake_case selectors are unaffected.
-        A group naming BOTH spellings of one selector is rejected —
-        last-write-wins would silently drop one predicate, and losing a
-        filter conjunct is the worst possible failure mode (pre-fallback
-        behavior was a fail-fast unknown-selector error; keep failing
-        fast)."""
-        out = {}
-        for k, v in grp.items():
-            if k != "any" and k not in selectors:
-                ck = _camelize_lower(k)
-                if ck in selectors:
-                    if ck in grp or ck in out:
-                        raise InputArgumentError(
-                            f"any: group names selector '{ck}' more "
-                            f"than once (directly or via '{k}') — one "
-                            "predicate would be silently dropped")
-                    k = ck
-            out[k] = v
-        return out
-
-    def _validate_args(self, args: dict) -> None:
-        """Eager fail-fast pass over the argument grammar: selector names,
-        operator names, injection guard. Column building happens later."""
-        _check_injection(args)
-        for attr, value in args.items():
-            if attr == "any":
-                for grp in _any_groups(value):
-                    self._validate_args(
-                        self._normalize_any_group(grp, self.cube.selectors))
-                continue
-            self.cube.selector(attr)  # raises on unknown
-            if isinstance(value, dict):
-                for op in value:
-                    if op not in OPERATORS:
-                        raise InputArgumentError(
-                            f"Unsupported selector operator '{op}'")
-            elif isinstance(value, (list, tuple)) and value \
-                    and all(isinstance(v, dict) for v in value):
-                for h in value:
-                    for op in h:
-                        if op not in OPERATORS:
-                            raise InputArgumentError(
-                                f"Unsupported selector operator '{op}'")
-
-    # --------------------------------------------------- element name sets
-    def _selector_names(self, args: dict) -> set[str]:
-        out: set[str] = set()
-        for attr, value in args.items():
-            if attr == "any":
-                for grp in _any_groups(value):
-                    out |= self._selector_names(
-                        self._normalize_any_group(grp, self.cube.selectors))
-            else:
-                out.add(attr)
-        return out
+    # ------------------------------------------------------ parsed filters
+    def _selector_set(self) -> set[str]:
+        """Every selector the query's filters and measure scopes name."""
+        wheres = [m.where for m in self._measures if m.where]
+        return {n for f in self._filters + wheres for n in f.selectors}
 
     def element_names(self) -> tuple[set[str], set[str], set[str]]:
         """Dims reported at *grain* granularity (``dim.sub`` compound keys)
@@ -337,66 +352,50 @@ class CubeQueryBuilder:
         dims = {f"{s.dimension}.{s.sub}" if s.sub else s.dimension
                 for s in self._slices}
         mets = {m.metric for m in self._measures}
-        sels: set[str] = set()
-        for args in self._filters:
-            sels |= self._selector_names(args)
-        for m in self._measures:
-            if m.where:
-                sels |= self._selector_names(m.where)
-        return dims, mets, sels
+        return dims, mets, self._selector_set()
 
-    # ---------------------------------------------------------- predicates
-    def _predicate(self, resolver, args: dict) -> Optional[Column]:
-        """Argument grammar → one boolean Column (AND of attrs), or None if
-        every predicate was nil-dropped.
+    def _fold_filter(self, f: Filter, leaf: Callable[[Term], Any],
+                    all_of: Callable[[list], Any],
+                    any_of: Callable[[list], Any]) -> Any:
+        """Fold a parsed filter into one predicate: ``leaf`` emits a term,
+        ``all_of`` ANDs a non-empty list, ``any_of`` ORs one. None when no
+        term survives. Shared by the Column compiler and the SQL printer;
+        each supplies its own emitters. Under ``strict_reference_compat``
+        a nil-valued term inside an ``any:`` group is dropped
+        (parse_tree.rb:177) — read here, so the flag may be set before or
+        after ``when()``."""
+        def fold(terms: tuple, in_any: bool) -> Any:
+            parts = []
+            for t in terms:
+                if isinstance(t, AnyOf):
+                    groups = [g for g in (fold(grp, True) for grp in t.groups)
+                              if g is not None]
+                    if groups:
+                        parts.append(any_of(groups))
+                elif not (in_any and t.value is None
+                          and self._strict_ref_compat):
+                    parts.append(leaf(t))
+            return all_of(parts) if parts else None
+        return fold(f.terms, False)
 
-        * scalar value            → eq shorthand          (F1, parse_tree.rb:124-125)
-        * {op: val, ...} hash     → AND of operator pairs (F2, :121-122,149-156)
-        * [scalars]               → IN list               (F3, :185-195)
-        * [{...}, {...}]          → AND of hashes         (F4, :187-190)
-        * any: [grp, grp, ...]    → OR of AND-groups      (F6, :117-118,162-183)
-        """
-        preds: list[Column] = []
-        for attr, value in args.items():
-            if attr == "any":
-                groups: list[Column] = []
-                for grp in _any_groups(value):
-                    grp = self._normalize_any_group(grp, resolver.selectors)
-                    if self._strict_ref_compat:
-                        grp = _drop_nil_ops(grp)
-                    gpred = self._predicate(resolver, grp)
-                    if gpred is not None:
-                        groups.append(gpred)
-                if groups:
-                    ored = groups[0]
-                    for g in groups[1:]:
-                        ored = ored | g
-                    preds.append(ored)
-                continue
-            sel = resolver.selectors[attr]
-            preds.extend(self._attr_predicates(sel, value))
-        if not preds:
-            return None
-        out = preds[0]
-        for p in preds[1:]:
-            out = out & p
-        return out
+    def _predicate(self, resolver, f: Filter) -> Optional[Column]:
+        """A parsed filter as one boolean Column against ``resolver``'s
+        selectors (the cube or a representation)."""
+        return self._fold_filter(
+            f, lambda t: resolver.selectors[t.selector].predicate(t.op, t.value),
+            lambda ps: functools.reduce(operator.and_, ps),
+            lambda gs: functools.reduce(operator.or_, gs))
 
-    def _attr_predicates(self, sel, value) -> list[Column]:
-        if isinstance(value, dict):  # F2 operator hash
-            return [sel.predicate(op, v) for op, v in value.items()
-                    if applicable_operator(op, v)]
-        if isinstance(value, (list, tuple)):
-            if value and all(isinstance(v, dict) for v in value):  # F4
-                out = []
-                for h in value:
-                    out.extend(self._attr_predicates(sel, h))
-                return out
-            return [sel.predicate("in", list(value))]  # F3
-        # F1 bare scalar (or None) → eq
-        if applicable_operator("eq", value):
-            return [sel.predicate("eq", value)]
-        return []
+    def _grouping_set_keys(self) -> list[tuple[str, ...]]:
+        """The ``sets`` grouping as slice path keys, each checked against
+        the declared slices (a set may be given before its slices)."""
+        declared = {s.key for s in self._slices}
+        for keys in self._grouping_sets or []:
+            unknown = [k[len(PATH_PREFIX):] for k in keys if k not in declared]
+            if unknown:
+                raise InputArgumentError(
+                    f"grouping set references unknown slice(s) {unknown}")
+        return self._grouping_sets or []
 
     # ------------------------------------------------------------- compile
     def required_tables(self) -> frozenset[str]:
@@ -407,12 +406,8 @@ class CubeQueryBuilder:
             req |= self.cube.dimension(s.dimension).requires
         for m in self._measures:
             req |= self.cube.metric(m.metric).requires
-            if m.where:
-                for name in self._selector_names(m.where):
-                    req |= self.cube.selector(name).requires
-        for args in self._filters:
-            for name in self._selector_names(args):
-                req |= self.cube.selector(name).requires
+        for name in self._selector_set():
+            req |= self.cube.selector(name).requires
         return frozenset(req)
 
     def cache_key(self) -> str:
@@ -433,8 +428,8 @@ class CubeQueryBuilder:
 
     def _filtered(self, base: DataFrame, resolver) -> DataFrame:
         """Apply the query's filters against ``resolver``'s selectors."""
-        for args in self._filters:
-            pred = self._predicate(resolver, args)
+        for f in self._filters:
+            pred = self._predicate(resolver, f)
             if pred is not None:
                 base = base.filter(pred)
         return base
@@ -543,19 +538,37 @@ class CubeQueryBuilder:
         if watermark is not None:
             wm_col, delay = watermark
             base = base.withWatermark(wm_col, delay)
-        base = self._filtered(base, self.cube)
-        slice_cols = self._slice_cols(self.cube)
-        measure_cols = self._measure_cols(self.cube)
-        if measure_cols:
-            out = (base.groupBy(*slice_cols).agg(*measure_cols)
-                   if slice_cols else base.agg(*measure_cols))
-        elif slice_cols:
-            out = base.select(*slice_cols).distinct()
-        else:
-            raise InputArgumentError("Query requests no dimensions or metrics")
+        out = self._aggregate(base, self.cube)
         for fn in self._transforms:
             out = fn(out)
         return out
+
+    def _aggregate(self, base: DataFrame, resolver) -> DataFrame:
+        """filter → group → aggregate against ``resolver`` (the cube or a
+        representation), before any option."""
+        base = self._filtered(base, resolver)
+        slice_cols = self._slice_cols(resolver)
+        measure_cols = self._measure_cols(resolver)
+        if measure_cols:
+            if not slice_cols:
+                return base.agg(*measure_cols)
+            if self._grouping_mode == "sets":
+                # groupingSets matches set entries to grouping columns by
+                # expression; aliased exprs never match (they come out
+                # all-NULL), so pre-project the slices and group by plain
+                # column references instead
+                pre = base.select("*", *slice_cols)
+                return (pre.groupingSets(
+                            [[pre[f"`{k}`"] for k in keys]
+                             for keys in self._grouping_set_keys()],
+                            *[pre[f"`{s.key}`"] for s in self._slices])
+                        .agg(*measure_cols))
+            grouper = {"groupby": base.groupBy, "rollup": base.rollup,
+                       "cube": base.cube}[self._grouping_mode]
+            return grouper(*slice_cols).agg(*measure_cols)
+        if slice_cols:
+            return base.select(*slice_cols).distinct()
+        raise InputArgumentError("Query requests no dimensions or metrics")
 
     def _compile(self) -> tuple[DataFrame, Optional[Representation]]:
         rep = self.chosen_representation()
@@ -566,45 +579,7 @@ class CubeQueryBuilder:
             resolver = self.cube
             base = self.cube.table(self.database,
                                    required=self.required_tables())
-
-        base = self._filtered(base, resolver)
-
-        slice_cols = self._slice_cols(resolver)
-        measure_cols = self._measure_cols(resolver)
-
-        if measure_cols:
-            if slice_cols:
-                if self._grouping_mode == "sets":
-                    # groupingSets matches set entries to grouping columns
-                    # by expression; aliased exprs never match (they come
-                    # out all-NULL), so pre-project the slices and group by
-                    # plain column references instead
-                    pre = base.select("*", *slice_cols)
-                    by_name = {s.key[len(PATH_PREFIX):]: pre[f"`{s.key}`"]
-                               for s in self._slices}
-                    set_cols = []
-                    for names in self._grouping_sets or []:
-                        unknown = [n for n in names if n not in by_name]
-                        if unknown:
-                            raise InputArgumentError(
-                                f"grouping set references unknown slice(s) "
-                                f"{unknown}")
-                        set_cols.append([by_name[n] for n in names])
-                    out = (pre.groupingSets(
-                               set_cols,
-                               *[pre[f"`{s.key}`"] for s in self._slices])
-                           .agg(*measure_cols))
-                else:
-                    grouper = {"groupby": base.groupBy, "rollup": base.rollup,
-                               "cube": base.cube}[self._grouping_mode]
-                    out = grouper(*slice_cols).agg(*measure_cols)
-            else:
-                out = base.agg(*measure_cols)
-        elif slice_cols:
-            out = base.select(*slice_cols).distinct()
-        else:
-            raise InputArgumentError("Query requests no dimensions or metrics")
-
+        out = self._aggregate(base, resolver)
         state = _FoldState(order=[])
         for name, args in self._options:
             out = _OPTION_APPLIERS[name](out, args, state)
@@ -645,19 +620,54 @@ class _FoldState:
     order: list[Column] = field(default_factory=list)
 
 
-def _keyify(name: str) -> str:
-    """Option field names get the path prefix re-applied so they bind to
-    output aliases, not input columns (parse_tree.rb:138-147, §1.4)."""
-    return name if name.startswith(PATH_PREFIX) else PATH_PREFIX + name
-
-
-def _sort(df: DataFrame, fields: Any, state: _FoldState,
-          ascending: bool, as_integer: bool) -> DataFrame:
+def _path_keys(fields: Any) -> tuple[str, ...]:
+    """Option field names → path keys, so they bind to output aliases, not
+    input columns (parse_tree.rb:138-147, §1.4). A bare name is a
+    one-name list."""
     if isinstance(fields, str):
         fields = [fields]
+    if not isinstance(fields, (list, tuple)) \
+            or not all(isinstance(f_, str) for f_ in fields):
+        raise InputArgumentError(
+            f"expected a field name or a list of field names, got {fields!r}")
+    return tuple(PATH_PREFIX + f_ for f_ in fields)
+
+
+def _count(n: Any) -> int:
+    try:
+        return int(n)
+    except (TypeError, ValueError):
+        raise InputArgumentError(f"expected an integer, got {n!r}") from None
+
+
+def _limit_by_args(args: Any) -> tuple[tuple[str, ...], int, int]:
+    """``{each, limit[, offset]}`` → ``(each path keys, limit, offset)``."""
+    if not isinstance(args, dict) or "each" not in args or "limit" not in args:
+        raise InputArgumentError(
+            "limit_by expects {each: field(s), limit: n[, offset: m]}, "
+            f"got {args!r}")
+    return (_path_keys(args["each"]), _count(args["limit"]),
+            _count(args.get("offset") or 0))
+
+
+#: option name → parser of its raw argument; the parsed value is what the
+#: DataFrame fold below and sql.py's printed fold both read
+_OPTION_PARSERS: dict[str, Callable[[Any], Any]] = {
+    "asc": _path_keys,
+    "desc": _path_keys,
+    "asc_by_integer": _path_keys,
+    "desc_by_integer": _path_keys,
+    "limit": _count,
+    "offset": _count,
+    "limit_by": _limit_by_args,
+}
+
+
+def _sort(df: DataFrame, keys: tuple[str, ...], state: _FoldState,
+          ascending: bool, as_integer: bool) -> DataFrame:
     cols = []
-    for f_name in fields:
-        c = kcol(_keyify(f_name))
+    for key in keys:
+        c = kcol(key)
         if as_integer:
             # O2: integer interpretation of a string column. try_cast, not
             # cast: under ANSI mode (the Spark 4 default) cast('long')
@@ -670,15 +680,7 @@ def _sort(df: DataFrame, fields: Any, state: _FoldState,
     return df.orderBy(*cols)
 
 
-def _apply_limit(df: DataFrame, n: int, state: _FoldState) -> DataFrame:
-    return df.limit(int(n))
-
-
-def _apply_offset(df: DataFrame, n: int, state: _FoldState) -> DataFrame:
-    return df.offset(int(n))
-
-
-def _apply_limit_by(df: DataFrame, args: dict, state: _FoldState) -> DataFrame:
+def _apply_limit_by(df: DataFrame, args: tuple, state: _FoldState) -> DataFrame:
     """ClickHouse ``LIMIT n [OFFSET m] BY key`` (parse_tree.rb:142-143):
     keep rows ``m < rank <= m+n`` per distinct ``each`` group, ranked by the
     preceding sort options. Remaining output columns are appended to the
@@ -689,17 +691,12 @@ def _apply_limit_by(df: DataFrame, args: dict, state: _FoldState) -> DataFrame:
     ``WindowGroupLimitExec`` (rank limit pushed below the shuffle), so only
     ~n rows per group per partition survive the map side — the pattern holds
     at 100 TB."""
-    each = args["each"]
-    if isinstance(each, str):
-        each = [each]
-    limit = int(args["limit"])
-    offset = int(args.get("offset", 0) or 0)
-    part_cols = [kcol(_keyify(e)) for e in each]
+    keys, limit, offset = args
     order = list(state.order)
     # deterministic tie-break: any output column not already ordering
     for c in df.columns:
         order.append(kcol(c))
-    w = Window.partitionBy(*part_cols).orderBy(*order)
+    w = Window.partitionBy(*[kcol(k) for k in keys]).orderBy(*order)
     rn = "__aq_rn"
     out = (df.withColumn(rn, F.row_number().over(w))
              .filter((F.col(rn) > offset) & (F.col(rn) <= offset + limit))
@@ -712,7 +709,7 @@ _OPTION_APPLIERS: dict[str, Callable[[DataFrame, Any, _FoldState], DataFrame]] =
     "desc": lambda df, a, s: _sort(df, a, s, False, False),
     "asc_by_integer": lambda df, a, s: _sort(df, a, s, True, True),
     "desc_by_integer": lambda df, a, s: _sort(df, a, s, False, True),
-    "limit": _apply_limit,
-    "offset": _apply_offset,
+    "limit": lambda df, n, s: df.limit(n),
+    "offset": lambda df, n, s: df.offset(n),
     "limit_by": _apply_limit_by,
 }

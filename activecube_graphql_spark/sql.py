@@ -16,10 +16,19 @@ Two consumers:
 * **interop/debugging** — ``builder.to_sql()`` shows users the semantic
   query in plain SQL.
 
-Semantics mirrored 1:1 with query.py's DataFrame fold (same path-key
-aliases, same nil-predicate drop, same ordered-option application with
-explicit NULLS FIRST/LAST matching Spark's ``asc()``/``desc()`` defaults,
-same ``limit_by`` ranking incl. the deterministic all-column tie-break).
+What is shared with query.py's DataFrame compiler is the *parsed input*:
+the builder parses its filters once (``query.parse_filter`` — camelized
+``any:`` names, nil drop, scalar ``in`` coercion) and its options once
+(path keys, ints, ``limit_by`` triples), and both sides read that form;
+``CubeQueryBuilder._fold_filter`` walks the AND/OR tree and applies the
+``strict_reference_compat`` drop for both. What stays independent is
+*emission*: each operator, metric and option is printed here
+(``operator_sql``, ``Metric.sql``, ``_SQL_OPTION_APPLIERS``) and built as
+a Column there (``apply_operator``, ``Metric.agg``, ``_OPTION_APPLIERS``),
+so the printed SQL remains a second implementation to test against. The
+printed fold uses explicit NULLS FIRST/LAST to match Spark's
+``asc()``/``desc()`` defaults and the same ``limit_by`` ranking incl. the
+deterministic all-column tie-break.
 Elements without a declared SQL twin (approximate ``uniq``, struct-array
 metrics) raise :class:`NotSqlExpressible` — exactly the set the driver
 checks rows-only.
@@ -27,14 +36,13 @@ checks rows-only.
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING, Any, Optional
+from typing import TYPE_CHECKING, Optional
 
 from .errors import InputArgumentError, NotSqlExpressible
-from .functions.selector_ops import applicable_operator
 
 if TYPE_CHECKING:  # pragma: no cover
     from .model import Cube
-    from .query import CubeQueryBuilder
+    from .query import CubeQueryBuilder, Filter
 
 
 def _q(name: str) -> str:
@@ -44,61 +52,22 @@ def _q(name: str) -> str:
 
 # ---------------------------------------------------------------- predicates
 
-def args_sql(cube: "Cube", args: dict) -> Optional[str]:
-    """SQL twin of CubeQueryBuilder._predicate — AND of attribute
-    predicates, ``any:`` → OR of AND-groups, nil-args dropped."""
-    preds: list[str] = []
-    for attr, value in args.items():
-        if attr == "any":
-            from .query import _any_groups
-            groups = [g for g in (args_sql(cube, grp)
-                                  for grp in _any_groups(value))
-                      if g is not None]
-            if groups:
-                preds.append("(" + " OR ".join(groups) + ")")
-            continue
-        sel = cube.selectors[attr]
-        preds.extend(_attr_predicates_sql(sel, value))
-    if not preds:
-        return None
-    return " AND ".join(preds)
-
-
-def _attr_predicates_sql(sel, value) -> list[str]:
-    if isinstance(value, dict):  # F2 operator hash
-        return [sel.predicate_sql(op, v) for op, v in value.items()
-                if applicable_operator(op, v)]
-    if isinstance(value, (list, tuple)):
-        if value and all(isinstance(v, dict) for v in value):  # F4
-            out: list[str] = []
-            for h in value:
-                out.extend(_attr_predicates_sql(sel, h))
-            return out
-        return [sel.predicate_sql("in", list(value))]  # F3
-    if applicable_operator("eq", value):  # F1
-        return [sel.predicate_sql("eq", value)]
-    return []
+def filter_sql(builder: "CubeQueryBuilder", f: "Filter") -> Optional[str]:
+    """A parsed filter as one SQL predicate over the raw cube: AND of
+    terms, ``any:`` → parenthesized OR of AND-groups."""
+    selectors = builder.cube.selectors
+    return builder._fold_filter(
+        f, lambda t: selectors[t.selector].predicate_sql(t.op, t.value),
+        " AND ".join, lambda gs: "(" + " OR ".join(gs) + ")")
 
 
 # ---------------------------------------------------------------- FROM clause
 
 def from_sql(cube: "Cube", required: frozenset[str]) -> str:
-    """Base table + the required star joins (same dependency closure and
-    declaration-order materialization as Cube.table)."""
+    """Base table + the required star joins (the same joins, in the same
+    order, as Cube.table)."""
     parts = [cube.base_table]
-    if not cube.joins:
-        return cube.base_table
-    need = set(required)
-    by_name = {j.table: j for j in cube.joins}
-    frontier = list(need)
-    while frontier:
-        j = by_name.get(frontier.pop())
-        if j is not None and j.depends_on and j.depends_on not in need:
-            need.add(j.depends_on)
-            frontier.append(j.depends_on)
-    for j in cube.joins:
-        if j.table not in need:
-            continue
+    for j in cube.star_joins(required):
         if j.on_sql is None:
             raise NotSqlExpressible(f"join on '{j.table}' has no SQL twin")
         kw = {"inner": "JOIN", "left": "LEFT JOIN", "right": "RIGHT JOIN",
@@ -139,20 +108,13 @@ class _SqlLevel:
         return _SqlLevel(f"SELECT * FROM ({self.render()})", self.columns)
 
 
-def _keyify(name: str) -> str:
-    from .query import PATH_PREFIX
-    return name if name.startswith(PATH_PREFIX) else PATH_PREFIX + name
-
-
-def _sort_sql(level: _SqlLevel, fields: Any, state: dict,
+def _sort_sql(level: _SqlLevel, keys: tuple[str, ...], state: dict,
               ascending: bool, as_integer: bool) -> _SqlLevel:
-    if isinstance(fields, str):
-        fields = [fields]
     if level.order or level.limit is not None or level.offset is not None:
         level = level.wrapped()
     items = []
-    for f_name in fields:
-        expr = _q(_keyify(f_name))
+    for key in keys:
+        expr = _q(key)
         if as_integer:  # Spark cast('long') is TRY-semantics (NULL on junk)
             expr = f"TRY_CAST({expr} AS BIGINT)"
         items.append(f"{expr} ASC NULLS FIRST" if ascending
@@ -165,7 +127,7 @@ def _sort_sql(level: _SqlLevel, fields: Any, state: dict,
 def _limit_sql(level: _SqlLevel, n: int, state: dict) -> _SqlLevel:
     if level.limit is not None:
         level = level.wrapped()
-    level.limit = int(n)
+    level.limit = n
     return level
 
 
@@ -174,17 +136,13 @@ def _offset_sql(level: _SqlLevel, n: int, state: dict) -> _SqlLevel:
     # that already has LIMIT (SQL "LIMIT n OFFSET m" means the opposite fold)
     if level.limit is not None or level.offset is not None:
         level = level.wrapped()
-    level.offset = int(n)
+    level.offset = n
     return level
 
 
-def _limit_by_sql(level: _SqlLevel, args: dict, state: dict) -> _SqlLevel:
-    each = args["each"]
-    if isinstance(each, str):
-        each = [each]
-    limit = int(args["limit"])
-    offset = int(args.get("offset", 0) or 0)
-    part = ", ".join(_q(_keyify(e)) for e in each)
+def _limit_by_sql(level: _SqlLevel, args: tuple, state: dict) -> _SqlLevel:
+    keys, limit, offset = args
+    part = ", ".join(_q(k) for k in keys)
     order = list(state.get("order", []))
     # deterministic tie-break: every output column (query.py parity)
     order += [f"{_q(c)} ASC NULLS FIRST" for c in level.columns]
@@ -228,11 +186,11 @@ def query_sql(builder: "CubeQueryBuilder") -> str:
         group_exprs.append(expr)
         columns.append(s.key)
     for m in builder._measures:
-        cond = args_sql(cube, m.where) if m.where else None
+        cond = filter_sql(builder, m.where) if m.where else None
         select_items.append(f"{cube.metric(m.metric).agg_sql(cond)} AS {_q(m.key)}")
         columns.append(m.key)
 
-    where_parts = [p for p in (args_sql(cube, a) for a in builder._filters)
+    where_parts = [p for p in (filter_sql(builder, f) for f in builder._filters)
                    if p is not None]
 
     sql = "SELECT "
@@ -250,19 +208,10 @@ def query_sql(builder: "CubeQueryBuilder") -> str:
         elif builder._grouping_mode == "cube":
             sql += " GROUP BY CUBE (" + ", ".join(group_exprs) + ")"
         elif builder._grouping_mode == "sets":
-            from .query import PATH_PREFIX
-            by_name = {s.key[len(PATH_PREFIX):]: e
-                       for s, e in zip(builder._slices, group_exprs)}
-
-            def slice_expr(n: str) -> str:
-                if n not in by_name:
-                    raise InputArgumentError(
-                        f"grouping_sets names unknown slice '{n}' "
-                        f"(declared slices: {sorted(by_name)})")
-                return by_name[n]
+            by_key = {s.key: e for s, e in zip(builder._slices, group_exprs)}
             sets_sql = ", ".join(
-                "(" + ", ".join(slice_expr(n) for n in names) + ")"
-                for names in builder._grouping_sets or [])
+                "(" + ", ".join(by_key[k] for k in keys) + ")"
+                for keys in builder._grouping_set_keys())
             sql += f" GROUP BY GROUPING SETS ({sets_sql})"
         else:
             sql += " GROUP BY " + ", ".join(group_exprs)

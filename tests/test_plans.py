@@ -1065,14 +1065,19 @@ def test_persisted_frames_are_reused(spark, sf_dir):
     ones instead of caching a copy per build."""
     from activecube_graphql_spark.driver_queries import QUERIES
 
-    def persisted_rdds() -> int:
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
+    def persisted_ids() -> set[int]:
+        # ids, not a count: the map also lists RDDs persisted for frames
+        # that earlier tests dropped (localCheckpoint), and a JVM GC
+        # removes those at an arbitrary point, lowering a count
+        return set(spark.sparkContext._jsc.getPersistentRDDs()
+                   .keySet().toArray())
 
     grew = []
     for name in PERSISTED:
         QUERIES[name](spark, sf_dir).collect()
-        before = persisted_rdds()
+        before = persisted_ids()
         QUERIES[name](spark, sf_dir).collect()
-        if persisted_rdds() != before:
-            grew.append((name, before, persisted_rdds()))
+        added = persisted_ids() - before
+        if added:
+            grew.append((name, sorted(added)))
     assert not grew, grew

@@ -124,6 +124,34 @@ def test_wsgi_roundtrip_and_transport_errors(cubes):
     assert status.startswith("200") and out["errors"], out
 
 
+def test_scalar_in_value_is_a_one_element_list(cubes):
+    """GraphQL list input coercion: a scalar where ``in``/``not_in`` expect
+    a list is a one-element list, never the characters of a string."""
+    def data(args: str) -> dict:
+        out = execute(cubes, "query { sales(%s) { returnflag count } }" % args)
+        assert "errors" not in out, out
+        return out["data"]
+    assert data('returnflag: {in: "RA"}') == data('returnflag: {in: ["RA"]}')
+    assert data('returnflag: {not_in: "RA"}') \
+        == data('returnflag: {not_in: ["RA"]}')
+    assert data("quantity: {in: 5}") == data("quantity: {in: [5]}")
+    assert data('returnflag: {in: "R"}')["sales"]
+
+
+def test_malformed_limit_by_is_an_in_band_error(cubes):
+    """A ``limit_by`` payload that is not an object, or lacks ``each`` or
+    ``limit``, is an input error answered in-band; the app keeps serving."""
+    app = wsgi_app(cubes)
+    doc = "query { sales(options: {limit_by: %s}) { returnflag count } }"
+    for bad in ["{limit: 1}", '{each: "returnflag"}', "5", '"returnflag"']:
+        status, out = _post(app, {"query": doc % bad})
+        assert status.startswith("200"), bad
+        assert "limit_by" in out["errors"][0]["message"], out
+    status, out = _post(app, {"query": doc % '{each: "returnflag", limit: 1}'})
+    assert status.startswith("200") and "errors" not in out
+    assert len(out["data"]["sales"]) == 3
+
+
 # ------------------------------------------------------------ introspection
 
 def test_introspection_loads_in_real_client(cubes):

@@ -105,6 +105,31 @@ def test_nil_drop_matches(sales, duck):
     assert_match(q, duck)
 
 
+def test_any_group_camelized_name(spark, duck):
+    """A snake_case name inside an ``any:`` group resolves a camelCase
+    selector in the printer exactly as in the compiler (parse_tree.rb:170)."""
+    from activecube_graphql_spark.cubes import SalesCube
+    cube = SalesCube(spark, SF_SMALL)
+    cube.selectors = dict(cube.selectors)  # instance-local, no class leak
+    cube.selectors["returnFlag"] = cube.selectors["returnflag"]
+    q = (cube.query().slice("linestatus").measure("count")
+         .when({"any": [{"return_flag": "R"}]}))
+    assert assert_match(q, duck) > 0
+
+
+@pytest.mark.parametrize("flag_first", [True, False])
+def test_strict_reference_compat_any_group_nil(sales, duck, flag_first):
+    """Under ``strict_reference_compat`` a nil null-op inside ``any:`` is
+    dropped by the printer too, whether the flag comes before or after
+    ``when()``: the group carries no predicate, every row counts."""
+    q = sales.query().slice("linestatus").measure("count")
+    args = {"any": [{"returnflag": {"is": None}}]}
+    q = (q.strict_reference_compat().when(args) if flag_first
+         else q.when(args).strict_reference_compat())
+    assert "IS NULL" not in q.to_sql()
+    assert assert_match(q, duck) == 2
+
+
 def test_null_safe_ops(sales, duck):
     q = (sales.query().slice("linestatus").measure("count")
          .when({"returnflag": {"not": "A"}}))

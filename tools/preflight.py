@@ -6,7 +6,9 @@ Stages (each fails the gate on error):
 
 1. pytest — the full suite; with --fast only the registry plan sweep
    (``tests/test_plans.py::test_registry_plan_invariants``, ~1-2 min:
-   every row's plan and build-time actions against the rule table).
+   every row's plan and build-time actions against the rule table),
+   then the engine ⟷ SQL-printer agreement tests
+   (``tests/test_sql_printer.py``, ``tests/test_semantics.py``).
 2. entry smoke — ``entry(spark)`` on a BARE session at sf0.001
    (the driver's own harness builds the session, not us).
 3. result-dtype audit — Spark vs DuckDB physical column types for every
@@ -49,6 +51,9 @@ def main() -> None:
         run("registry plan sweep", [
             py, "-m", "pytest",
             "tests/test_plans.py::test_registry_plan_invariants", "-q"])
+        run("engine / SQL printer agreement", [
+            py, "-m", "pytest", "tests/test_sql_printer.py",
+            "tests/test_semantics.py", "-q"])
     else:
         run("pytest", [py, "-m", "pytest", "tests/", "-q"])
 
