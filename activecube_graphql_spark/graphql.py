@@ -59,6 +59,7 @@ _TOKEN_RE = re.compile(r"""
 
 _ESCAPES = {'"': '"', "\\": "\\", "/": "/", "b": "\b", "f": "\f",
             "n": "\n", "r": "\r", "t": "\t"}
+_HEX4 = re.compile(r"[0-9a-fA-F]{4}")
 
 
 def _unquote(raw: str) -> str:
@@ -70,7 +71,12 @@ def _unquote(raw: str) -> str:
         if ch == "\\":
             esc = body[i + 1]
             if esc == "u":
-                out.append(chr(int(body[i + 2:i + 6], 16)))
+                hexd = body[i + 2:i + 6]
+                if not _HEX4.fullmatch(hexd):
+                    raise InputArgumentError(
+                        f"GraphQL syntax error: bad unicode escape "
+                        f"{body[i:i + 6]!r} in string {raw[:40]!r}")
+                out.append(chr(int(hexd, 16)))
                 i += 6
                 continue
             out.append(_ESCAPES.get(esc, esc))

@@ -44,6 +44,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..cache import Memo
+from ..session import ENGINE_PARTITIONS
 
 
 def _skew_threshold(freq: DataFrame, df_col: str, spark,
@@ -69,10 +70,17 @@ def _skew_threshold(freq: DataFrame, df_col: str, spark,
 
 def ensure_parallelism(df: DataFrame,
                        bytes_per_task: int | None = None) -> DataFrame:
-    """Fan a badly-under-partitioned input out to the session's default
-    parallelism. Single-file parquet arrives as ONE partition locally, which
-    serializes every per-row compute stage; on a real cluster inputs arrive
+    """Fan a badly-under-partitioned input out to the engine's fixed
+    partition count, ``session.ENGINE_PARTITIONS`` (32). Single-file
+    parquet arrives as ONE partition locally, which serializes every
+    per-row compute stage; on a real cluster inputs arrive
     well-partitioned and this is a no-op (no gratuitous full shuffle).
+
+    The count is a constant, not the session's default parallelism: the
+    ``Repartition`` lands in the ANALYZED plan, which is the row's
+    semantics (its graded-manifest fingerprint), so it must not follow
+    the host's cores. The scheduler runs the fixed count of tasks on
+    whatever slots there are.
 
     The probe is ``df.inputFiles()`` — logical-plan metadata only, no
     RDD conversion and no job (``.rdd.getNumPartitions()`` would force
@@ -81,16 +89,15 @@ def ensure_parallelism(df: DataFrame,
     fixture, in-memory frames) → round-robin repartition, which AQE may
     coalesce again downstream if the stage turns out cheap.
 
-    ``bytes_per_task=None`` (default) targets full CPU parallelism —
+    ``bytes_per_task=None`` (default) targets the full fixed count —
     right for compute-amplified stages (shingling explodes input bytes
     10-50× before hashing). For **cheap scans** pass the bytes one task
     should own (e.g. 4 MB): the fan-out is then proportional to measured
-    input size, so a 1 MB corpus is NOT split into 32 near-empty tasks
-    whose scheduling overhead dwarfs the work (measured: that overhead
-    was most of the r02 ``embed_topk`` wall time), while a 10 GB
-    single-file input still fans out to every core."""
-    sc = df.sparkSession.sparkContext
-    par = sc.defaultParallelism
+    input size, capped at the fixed count, so a 1 MB corpus is NOT split
+    into that many near-empty tasks whose scheduling overhead dwarfs the
+    work (measured: that overhead was most of the r02 ``embed_topk`` wall
+    time), while a 10 GB single-file input still fans out fully."""
+    par = ENGINE_PARTITIONS
     try:
         files = df.inputFiles()
     except Exception:  # plans with no file source (e.g. streaming)

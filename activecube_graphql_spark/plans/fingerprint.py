@@ -21,8 +21,13 @@ Normalization strips the run-varying parts of a plan string:
   paths) so the fingerprint is stable across sf dirs and temp dirs.
 
 Determinism contract: for a fixed tree, fingerprinting the same row in
-two different processes yields the same hash (pinned by
+two different processes yields the same hash, on any host (pinned by
 tests/test_driver_contract.py::test_plan_fingerprint_deterministic).
+Execution settings — core count, cluster-profile confs — never reach an
+analyzed plan: operators that write a partition count into a logical
+plan take the engine's fixed ``session.ENGINE_PARTITIONS``, not the
+session's default parallelism (pinned by
+tests/test_plans.py::test_ensure_parallelism_plan_ignores_host_cores).
 Truncation would break that silently, so the tree is rendered with
 ``spark.sql.debug.maxToStringFields`` raised far past any schema here.
 """

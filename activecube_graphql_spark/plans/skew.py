@@ -31,6 +31,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import ENGINE_PARTITIONS
+
 _SALT = "__aq_salt"
 
 
@@ -130,13 +132,13 @@ def split_salted_join(skewed: DataFrame, other: DataFrame,
     else:
         # spark.sql.shuffle.partitions may be non-numeric on managed
         # platforms (e.g. 'auto' under Databricks AQE); fall back to
-        # the cluster's default parallelism rather than raising
-        # (ADVICE r06)
+        # the engine's fixed count rather than raising (ADVICE r06) —
+        # not the host's cores, which would reach the logical plan
         conf = skewed.sparkSession.conf.get("spark.sql.shuffle.partitions")
         try:
             parts = int(conf)
         except (TypeError, ValueError):
-            parts = skewed.sparkSession.sparkContext.defaultParallelism
+            parts = ENGINE_PARTITIONS
     hk = F.broadcast(hot_keys.select(*keys).distinct()
                      .withColumn("__aq_hot", F.lit(1)))
     basis = [c for c in (salt_by if salt_by is not None else

@@ -13,6 +13,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: The engine's one host-independent partition count: ``get_spark``'s
+#: ``spark.sql.shuffle.partitions`` default and the fan-out that
+#: ``operators.dedup.ensure_parallelism`` and the salted join in
+#: ``plans/skew.py`` write into a LOGICAL plan. Never the host's core
+#: count: an analyzed plan is a row's semantics (its graded-manifest
+#: fingerprint) and must be the same on every host; the scheduler runs
+#: the fixed count of tasks on whatever slots there are.
+ENGINE_PARTITIONS = 32
+
+
 #: Runtime-settable SQL confs every read path depends on.  These are applied
 #: to the *caller's* session (whatever it is) so correctness never depends on
 #: who built the SparkSession — an externally-created vanilla session (e.g. a
@@ -175,7 +185,8 @@ def get_spark(app_name: str = "activecube-graphql-spark",
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE",
+                                                ENGINE_PARTITIONS))
     # Pin BLAS/OMP pools to one thread per python worker (r12, VERDICT
     # r11 item 1): Spark already runs one task per core, so any BLAS
     # threading inside a worker oversubscribes cores × threads — on a

@@ -429,6 +429,23 @@ def test_parser_never_crashes_uncontrolled(garbage):
         pass
 
 
+def test_unicode_escapes_decode_or_raise_input_error():
+    """A ``\\u`` escape takes exactly four hex digits: a valid one
+    decodes, and a short or signed one is the engine's InputArgumentError,
+    not a ValueError from ``int()``/``chr()``."""
+    import pytest
+
+    from activecube_graphql_spark.errors import InputArgumentError
+    from activecube_graphql_spark.graphql import parse_graphql
+
+    out = parse_graphql('{ sales(x: "caf\\u00e9") { a } }')
+    assert out["args"]["x"] == "caf\u00e9"
+    for bad in ('"\\u"', '{ sales(x: "\\u12") { a } }',
+                '{ sales(x: "\\u-159") { a } }'):
+        with pytest.raises(InputArgumentError, match="unicode escape"):
+            parse_graphql(bad)
+
+
 @settings(max_examples=40, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])
 @given(st.integers(0, 2**32 - 1))

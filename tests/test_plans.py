@@ -754,6 +754,43 @@ def test_cluster_profile_plan_invariance_sf01_subset(spark):
         S.restore_confs(spark, prior)
 
 
+def test_ensure_parallelism_plan_ignores_host_cores(spark, sf_dir,
+                                                    monkeypatch):
+    """ensure_parallelism's Repartition lands in the ANALYZED plan, so
+    its count must not follow the host's cores: with SparkContext's
+    defaultParallelism patched to 7, a single-file frame fans out to the
+    same plan as on the real host, on both the default and the
+    ``bytes_per_task`` path. The manifest checks above see a host count
+    in a plan only on hosts whose core count differs from the stamping
+    host's; this sees it on any host."""
+    from pyspark import SparkContext
+
+    from activecube_graphql_spark.operators.dedup import (
+        ensure_parallelism,
+    )
+    from activecube_graphql_spark.plans.fingerprint import (
+        plan_fingerprint,
+    )
+
+    frame = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    assert len(frame.inputFiles()) == 1
+
+    def fingerprints():
+        # 1 KiB per task asks for more tasks than any cap: the cap decides
+        fanned = [ensure_parallelism(frame),
+                  ensure_parallelism(frame, bytes_per_task=1024)]
+        for df in fanned:
+            assert "Repartition" in \
+                df._jdf.queryExecution().analyzed().toString()
+        return [plan_fingerprint(df) for df in fanned]
+
+    host = fingerprints()
+    monkeypatch.setattr(SparkContext, "defaultParallelism",
+                        property(lambda self: 7))
+    assert spark.sparkContext.defaultParallelism == 7
+    assert fingerprints() == host
+
+
 # --------------------------------------------------------------------
 # Registry sweep: one table of plan rules over every QUERIES row, built
 # once per session at sf0.001 (conftest ``registry``). Each rule reads

@@ -193,3 +193,39 @@ def test_split_salted_join_rejects_key_dtype_mismatch(spark):
     hot = spark.createDataFrame([(0,)], "k int")
     with pytest.raises(ValueError, match="dtype mismatch"):
         split_salted_join(left, right, ["k"], hot, salts=4, salt_by=["v"])
+
+
+def test_split_salted_join_fallback_count_ignores_host_cores(
+        spark, monkeypatch):
+    """Where ``spark.sql.shuffle.partitions`` is not numeric (managed
+    platforms report 'auto'), the pinned probe repartition falls back to
+    the engine's fixed count — never the host's cores, which would put
+    the core count into the LOGICAL plan. defaultParallelism is patched
+    to 7 so the fault shows on any host."""
+    import re
+
+    from pyspark import SparkContext
+    from pyspark.sql.conf import RuntimeConfig
+
+    from activecube_graphql_spark.plans.skew import split_salted_join
+    from activecube_graphql_spark.session import ENGINE_PARTITIONS
+
+    get = RuntimeConfig.get
+
+    def auto_partitions(self, key, *args, **kwargs):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return get(self, key, *args, **kwargs)
+
+    monkeypatch.setattr(RuntimeConfig, "get", auto_partitions)
+    monkeypatch.setattr(SparkContext, "defaultParallelism",
+                        property(lambda self: 7))
+    left = spark.range(0, 10).select(F.col("id").alias("k"),
+                                     F.col("id").alias("v"))
+    right = spark.range(0, 10).select(F.col("id").alias("k"),
+                                      F.col("id").alias("w"))
+    hot = spark.createDataFrame([(0,)], "k long")
+    j = split_salted_join(left, right, ["k"], hot, salts=4, salt_by=["v"])
+    tree = j._jdf.queryExecution().analyzed().toString()
+    counts = re.findall(r"RepartitionByExpression \[[^\]]*\], (\d+)", tree)
+    assert counts == [str(ENGINE_PARTITIONS)], tree[:3000]
