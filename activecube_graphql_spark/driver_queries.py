@@ -46,7 +46,8 @@ _REV = f"CAST(round({money_sum_sql(_REVENUE_SQL)}, 2) AS DOUBLE)"
 
 def _rev_if(cond: str) -> str:
     """Conditional (metric-scoped-filter) twin of ``_REV``."""
-    return f"CAST(round({money_sum_sql(_REVENUE_SQL, cond)}, 2) AS DOUBLE)"
+    e = f"CASE WHEN {cond} THEN {_REVENUE_SQL} END"
+    return f"CAST(round({money_sum_sql(e)}, 2) AS DOUBLE)"
 
 
 #: Cube instances per (session, sf_dir) — the deployment shape (a

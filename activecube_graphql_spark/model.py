@@ -39,7 +39,14 @@ def _as_factory(expr: "str | Column | ColumnFactory") -> ColumnFactory:
     return expr
 
 
-def money_sum_sql(expr_sql: str, cond_sql: Optional[str] = None) -> str:
+def _sql_twin(expr: "str | Column | ColumnFactory",
+              sql: Optional[str]) -> Optional[str]:
+    """An element's SQL twin: the declared one, else the expression itself
+    when it is a plain column name (a Column or factory has none)."""
+    return expr if sql is None and isinstance(expr, str) else sql
+
+
+def money_sum_sql(expr_sql: str) -> str:
     """The ANSI twin of ``Metric.money_sum`` emission, shared verbatim by
     the metric's printer and the hand-written driver oracles so both
     engines always run the identical arithmetic: sum the integer
@@ -50,8 +57,7 @@ def money_sum_sql(expr_sql: str, cond_sql: Optional[str] = None) -> str:
     double division and floor behave identically, and the BIGINT cast
     re-narrows.  Exact while the group's cents4 sum stays under 2⁵³
     (≈ $9·10¹¹ revenue in ONE group); see ``Metric.money_sum``."""
-    e = f"CASE WHEN {cond_sql} THEN {expr_sql} END" if cond_sql else expr_sql
-    return (f"CAST(CAST(floor((sum({e}) + 50) / CAST(100 AS DOUBLE)) "
+    return (f"CAST(CAST(floor((sum({expr_sql}) + 50) / CAST(100 AS DOUBLE)) "
             f"AS BIGINT) AS DOUBLE) / 100")
 
 
@@ -92,13 +98,11 @@ class Dimension:
     typename_sql: Optional[str] = None
 
     def __post_init__(self) -> None:
-        if self.sql is None and isinstance(self.expr, str):
-            self.sql = self.expr
+        self.sql = _sql_twin(self.expr, self.sql)
         self.expr = _as_factory(self.expr)
         if self.typename is not None:
             self.union = True
-            if self.typename_sql is None and isinstance(self.typename, str):
-                self.typename_sql = self.typename
+            self.typename_sql = _sql_twin(self.typename, self.typename_sql)
             tn = _as_factory(self.typename)
             self.typename = tn
             # expose as a sub-field so slicing/printing reuse one path;
@@ -153,29 +157,38 @@ class Metric:
 
     # -- common constructors ------------------------------------------------
     @staticmethod
-    def _sql_of(expr, sql_expr: Optional[str]) -> Optional[str]:
-        return sql_expr if sql_expr is not None else (expr if isinstance(expr, str) else None)
+    def _of(fn: Callable[..., Column], *inputs,
+            fn_sql: Optional[Callable[..., str]] = None,
+            conditioned: Optional[tuple[int, ...]] = None,
+            requires: frozenset[str] = frozenset(),
+            tuple_fields: Optional[tuple[str, ...]] = None) -> "Metric":
+        """The one conditional-aggregate rule behind every constructor.
 
-    @staticmethod
-    def _wrap(fn: Callable[[Column], Column], expr: "str | Column | ColumnFactory",
-              requires: frozenset[str] = frozenset(), fn_sql: Optional[str] = None,
-              sql_expr: Optional[str] = None,
-              sql_cast: Optional[str] = None) -> "Metric":
-        factory = _as_factory(expr)
-        e_sql = Metric._sql_of(expr, sql_expr)
+        Each input is an element expression (column name, Column or
+        factory) or an ``(expression, sql_twin)`` pair. ``fn`` aggregates
+        the inputs' Columns, ``fn_sql`` their SQL twins. A metric-scoped
+        condition nulls each ``conditioned`` input (default: all) before
+        ``fn`` / ``fn_sql`` sees it — ``F.when(cond, c)`` here and
+        ``CASE WHEN cond THEN e END`` there — so a filtered row drops out
+        of every NULL-skipping aggregate. The metric is printable iff
+        ``fn_sql`` is given and every input has a SQL twin."""
+        pairs = [i if isinstance(i, tuple) else (i, None) for i in inputs]
+        factories = [_as_factory(e) for e, _ in pairs]
+        twins = [_sql_twin(e, s) for e, s in pairs]
+        scoped = range(len(pairs)) if conditioned is None else conditioned
 
         def agg(cond: Optional[Column]) -> Column:
-            c = factory()
-            return fn(F.when(cond, c)) if cond is not None else fn(c)
+            return fn(*(F.when(cond, f()) if cond is not None and i in scoped
+                        else f() for i, f in enumerate(factories)))
 
         sql = None
-        if e_sql is not None and fn_sql is not None:
-            def sql(cond_sql: Optional[str], _f=fn_sql, _e=e_sql,
-                    _c=sql_cast) -> str:
-                inner = f"CASE WHEN {cond_sql} THEN {_e} END" if cond_sql else _e
-                out = f"{_f}({inner})"
-                return f"CAST({out} AS {_c})" if _c else out
-        return Metric(agg=agg, requires=requires, sql=sql)
+        if fn_sql is not None and None not in twins:
+            def sql(cond_sql: Optional[str]) -> str:
+                return fn_sql(*(f"CASE WHEN {cond_sql} THEN {e} END"
+                                if cond_sql and i in scoped else e
+                                for i, e in enumerate(twins)))
+        return Metric(agg=agg, requires=requires, sql=sql,
+                      tuple_fields=tuple_fields)
 
     @staticmethod
     def sum(expr, requires=frozenset(), sql_expr=None, sql_cast=None) -> "Metric":
@@ -183,7 +196,9 @@ class Metric:
         widen integer SUM beyond int64 (DuckDB → HUGEINT/decimal128),
         which a result harness materializes as float — the printed oracle
         must pin the physical type Spark produces (LongType)."""
-        return Metric._wrap(F.sum, expr, requires, "sum", sql_expr, sql_cast)
+        return Metric._of(F.sum, (expr, sql_expr), requires=requires,
+                          fn_sql=lambda e: (f"CAST(sum({e}) AS {sql_cast})"
+                                            if sql_cast else f"sum({e})"))
 
     @staticmethod
     def money_sum(expr, requires=frozenset(), sql_expr=None,
@@ -228,54 +243,50 @@ class Metric:
         only under the same 2⁵³ bound — past it (two_level's whole
         regime) the twin would diverge in value AND type, so two_level
         metrics raise NotSqlExpressible from the printer instead."""
-        factory = _as_factory(expr)
-        e_sql = Metric._sql_of(expr, sql_expr)
-
-        def agg(cond: Optional[Column]) -> Column:
-            c = factory()
-            c = F.when(cond, c) if cond is not None else c
-            if two_level:
-                # per-row int64 split via BIT ops at a power-of-2 radix
-                # (2²⁰), exact for EVERY long: a `/`-based split would
-                # round the dividend to double first and mis-split any
-                # per-row value above 2⁵³ (review r08 finding — the
-                # arithmetic >> floors and the mask extracts pmod for
-                # all signs, with no float anywhere). The only decimal
-                # ops run once per OUTPUT group, not per input row.
-                hi = F.sum(F.shiftright(c, 20))
-                lo = F.sum(c.bitwiseAND(F.lit((1 << 20) - 1)))
-                total = hi.cast("decimal(38,0)") * (1 << 20) + lo
-                cents = F.floor((total + 50) / 100)  # exact: ≤2dp value
-                return (cents / 100).cast("decimal(38,2)")
+        def one_level(c: Column) -> Column:
             s = F.sum(c)
             # long/int '/' is double division in Spark; s+50 < 2^53 by
             # the documented bound, so the quotient's floor is exact
             return F.floor((s + F.lit(50)) / F.lit(100)).cast("double") / 100
 
-        sql = None
-        if e_sql is not None and not two_level:
-            # two_level carries NO printed twin on purpose (review r08):
-            # money_sum_sql's double-division emission is exact only
-            # under the same 2^53 bound two_level exists to exceed, and
-            # its emitted type (DOUBLE) differs from two_level's
-            # DECIMAL(38,2) — a printed twin would be wrong exactly
-            # where the variant applies, so printing raises
-            # NotSqlExpressible instead.
-            def sql(cond_sql: Optional[str], _e=e_sql) -> str:
-                return money_sum_sql(_e, cond_sql)
-        return Metric(agg=agg, requires=requires, sql=sql)
+        def split(c: Column) -> Column:
+            # per-row int64 split via BIT ops at a power-of-2 radix
+            # (2²⁰), exact for EVERY long: a `/`-based split would
+            # round the dividend to double first and mis-split any
+            # per-row value above 2⁵³ (review r08 finding — the
+            # arithmetic >> floors and the mask extracts pmod for
+            # all signs, with no float anywhere). The only decimal
+            # ops run once per OUTPUT group, not per input row.
+            hi = F.sum(F.shiftright(c, 20))
+            lo = F.sum(c.bitwiseAND(F.lit((1 << 20) - 1)))
+            total = hi.cast("decimal(38,0)") * (1 << 20) + lo
+            cents = F.floor((total + 50) / 100)  # exact: ≤2dp value
+            return (cents / 100).cast("decimal(38,2)")
+
+        # two_level carries NO printed twin on purpose (review r08):
+        # money_sum_sql's double-division emission is exact only under
+        # the same 2^53 bound two_level exists to exceed, and its
+        # emitted type (DOUBLE) differs from two_level's DECIMAL(38,2) —
+        # a printed twin would be wrong exactly where the variant
+        # applies, so printing raises NotSqlExpressible instead.
+        return Metric._of(split if two_level else one_level,
+                          (expr, sql_expr), requires=requires,
+                          fn_sql=None if two_level else money_sum_sql)
 
     @staticmethod
     def avg(expr, requires=frozenset(), sql_expr=None) -> "Metric":
-        return Metric._wrap(F.avg, expr, requires, "avg", sql_expr)
+        return Metric._of(F.avg, (expr, sql_expr), requires=requires,
+                          fn_sql=lambda e: f"avg({e})")
 
     @staticmethod
     def min(expr, requires=frozenset(), sql_expr=None) -> "Metric":
-        return Metric._wrap(F.min, expr, requires, "min", sql_expr)
+        return Metric._of(F.min, (expr, sql_expr), requires=requires,
+                          fn_sql=lambda e: f"min({e})")
 
     @staticmethod
     def max(expr, requires=frozenset(), sql_expr=None) -> "Metric":
-        return Metric._wrap(F.max, expr, requires, "max", sql_expr)
+        return Metric._of(F.max, (expr, sql_expr), requires=requires,
+                          fn_sql=lambda e: f"max({e})")
 
     @staticmethod
     def any(expr, requires=frozenset()) -> "Metric":
@@ -285,35 +296,8 @@ class Metric:
         under parallel execution (partition order), exactly like the
         original, so it carries no SQL twin and stays out of
         hash-checked oracles."""
-        factory = _as_factory(expr)
-
-        def agg(cond: Optional[Column]) -> Column:
-            c = factory()
-            c = F.when(cond, c) if cond is not None else c
-            return F.any_value(c, True)  # ignoreNulls
-        return Metric(agg=agg, requires=requires)
-
-    @staticmethod
-    def _arg_by(fn: Callable[[Column, Column], Column], fn_sql: str,
-                value_expr, order_expr, requires, value_sql, order_sql
-                ) -> "Metric":
-        vf, of = _as_factory(value_expr), _as_factory(order_expr)
-        v_sql = Metric._sql_of(value_expr, value_sql)
-        o_sql = Metric._sql_of(order_expr, order_sql)
-
-        def agg(cond: Optional[Column]) -> Column:
-            # conditional form: null out the ordering key — min_by/max_by
-            # (like DuckDB arg_min/arg_max) ignore rows with NULL keys
-            o = of()
-            o = F.when(cond, o) if cond is not None else o
-            return fn(vf(), o)
-
-        sql = None
-        if v_sql is not None and o_sql is not None:
-            def sql(cond_sql: Optional[str], _v=v_sql, _o=o_sql) -> str:
-                o = f"CASE WHEN {cond_sql} THEN {_o} END" if cond_sql else _o
-                return f"{fn_sql}({_v}, {o})"
-        return Metric(agg=agg, requires=requires, sql=sql)
+        return Metric._of(lambda c: F.any_value(c, True),  # ignoreNulls
+                          expr, requires=requires)
 
     @staticmethod
     def arg_max(value_expr, order_expr, requires=frozenset(),
@@ -321,65 +305,55 @@ class Metric:
         """ClickHouse ``argMax(value, order)`` — the value on the row
         with the greatest ordering key. Deterministic (hence
         oracle-checkable) iff the ordering key is unique per group;
-        ``min_by``/``max_by`` is shared Spark/DuckDB SQL vocabulary."""
-        return Metric._arg_by(F.max_by, "max_by", value_expr, order_expr,
-                              requires, value_sql, order_sql)
+        ``min_by``/``max_by`` is shared Spark/DuckDB SQL vocabulary. The
+        conditional form nulls the ordering key only: min_by/max_by (like
+        DuckDB arg_min/arg_max) ignore rows with NULL keys."""
+        return Metric._of(F.max_by, (value_expr, value_sql),
+                          (order_expr, order_sql), conditioned=(1,),
+                          requires=requires,
+                          fn_sql=lambda v, o: f"max_by({v}, {o})")
 
     @staticmethod
     def arg_min(value_expr, order_expr, requires=frozenset(),
                 value_sql=None, order_sql=None) -> "Metric":
         """ClickHouse ``argMin(value, order)`` — see :meth:`arg_max`."""
-        return Metric._arg_by(F.min_by, "min_by", value_expr, order_expr,
-                              requires, value_sql, order_sql)
+        return Metric._of(F.min_by, (value_expr, value_sql),
+                          (order_expr, order_sql), conditioned=(1,),
+                          requires=requires,
+                          fn_sql=lambda v, o: f"min_by({v}, {o})")
 
     @staticmethod
     def count(requires=frozenset()) -> "Metric":
-        def agg(cond: Optional[Column]) -> Column:
-            return F.count(F.when(cond, F.lit(1))) if cond is not None else F.count(F.lit(1))
-
-        def sql(cond_sql: Optional[str]) -> str:
-            return f"count(CASE WHEN {cond_sql} THEN 1 END)" if cond_sql else "count(*)"
-        return Metric(agg=agg, requires=requires, sql=sql)
+        # counts a non-null marker per row; the unconditional form
+        # prints as the idiomatic count(*)
+        return Metric._of(F.count, (lambda: F.lit(1), "1"), requires=requires,
+                          fn_sql=lambda e: "count(*)" if e == "1"
+                          else f"count({e})")
 
     @staticmethod
     def count_distinct(expr, requires=frozenset(), sql_expr=None) -> "Metric":
         """Exact distinct (oracle-safe twin of ``uniq``)."""
-        factory = _as_factory(expr)
-        e_sql = Metric._sql_of(expr, sql_expr)
-
-        def agg(cond: Optional[Column]) -> Column:
-            c = factory()
-            return F.count_distinct(F.when(cond, c)) if cond is not None else F.count_distinct(c)
-
-        sql = None
-        if e_sql is not None:
-            def sql(cond_sql: Optional[str], _e=e_sql) -> str:
-                inner = f"CASE WHEN {cond_sql} THEN {_e} END" if cond_sql else _e
-                return f"count(DISTINCT {inner})"
-        return Metric(agg=agg, requires=requires, sql=sql)
+        return Metric._of(F.count_distinct, (expr, sql_expr), requires=requires,
+                          fn_sql=lambda e: f"count(DISTINCT {e})")
 
     @staticmethod
     def uniq(expr, rsd: float = 0.05, requires=frozenset()) -> "Metric":
         """ClickHouse ``uniq`` ≈ HLL approximate distinct (SURVEY §2.4 A3).
         Kept out of hash-checked oracles; tolerance-tested instead."""
-        factory = _as_factory(expr)
-
-        def agg(cond: Optional[Column]) -> Column:
-            c = factory()
-            return (F.approx_count_distinct(F.when(cond, c), rsd)
-                    if cond is not None else F.approx_count_distinct(c, rsd))
-        return Metric(agg=agg, requires=requires)
+        return Metric._of(lambda c: F.approx_count_distinct(c, rsd), expr,
+                          requires=requires)
 
     @staticmethod
     def stddev(expr, requires=frozenset(), sql_expr=None) -> "Metric":
         """Sample standard deviation (ClickHouse ``stddevSamp``)."""
-        return Metric._wrap(F.stddev_samp, expr, requires, "stddev_samp",
-                            sql_expr)
+        return Metric._of(F.stddev_samp, (expr, sql_expr), requires=requires,
+                          fn_sql=lambda e: f"stddev_samp({e})")
 
     @staticmethod
     def variance(expr, requires=frozenset(), sql_expr=None) -> "Metric":
         """Sample variance (ClickHouse ``varSamp``)."""
-        return Metric._wrap(F.var_samp, expr, requires, "var_samp", sql_expr)
+        return Metric._of(F.var_samp, (expr, sql_expr), requires=requires,
+                          fn_sql=lambda e: f"var_samp({e})")
 
     @staticmethod
     def corr(x_expr, y_expr, requires=frozenset(),
@@ -387,24 +361,9 @@ class Metric:
         """Pearson correlation of two expressions (ClickHouse ``corr``) —
         the first two-argument metric; the conditional form nulls both
         inputs so filtered rows drop from the pair set."""
-        fx, fy = _as_factory(x_expr), _as_factory(y_expr)
-        sx = Metric._sql_of(x_expr, x_sql)
-        sy = Metric._sql_of(y_expr, y_sql)
-
-        def agg(cond: Optional[Column]) -> Column:
-            x, y = fx(), fy()
-            if cond is not None:
-                x, y = F.when(cond, x), F.when(cond, y)
-            return F.corr(x, y)
-
-        sql = None
-        if sx is not None and sy is not None:
-            def sql(cond_sql: Optional[str], _x=sx, _y=sy) -> str:
-                if cond_sql:
-                    _x = f"CASE WHEN {cond_sql} THEN {_x} END"
-                    _y = f"CASE WHEN {cond_sql} THEN {_y} END"
-                return f"corr({_x}, {_y})"
-        return Metric(agg=agg, requires=requires, sql=sql)
+        return Metric._of(F.corr, (x_expr, x_sql), (y_expr, y_sql),
+                          requires=requires,
+                          fn_sql=lambda x, y: f"corr({x}, {y})")
 
     @staticmethod
     def quantile(expr, p: float, requires=frozenset(), sql_expr=None
@@ -413,20 +372,9 @@ class Metric:
         percentile (Spark ``percentile`` ≡ DuckDB ``quantile_cont``), so
         it is hash-oracle-checkable. Exact percentile holds all group
         values; for 100 TB hot paths prefer :meth:`quantile_approx`."""
-        factory = _as_factory(expr)
-        e_sql = Metric._sql_of(expr, sql_expr)
-
-        def agg(cond: Optional[Column]) -> Column:
-            c = factory()
-            c = F.when(cond, c) if cond is not None else c
-            return F.percentile(c, F.lit(p))
-
-        sql = None
-        if e_sql is not None:
-            def sql(cond_sql: Optional[str], _e=e_sql) -> str:
-                inner = f"CASE WHEN {cond_sql} THEN {_e} END" if cond_sql else _e
-                return f"quantile_cont({inner}, {p})"
-        return Metric(agg=agg, requires=requires, sql=sql)
+        return Metric._of(lambda c: F.percentile(c, F.lit(p)),
+                          (expr, sql_expr), requires=requires,
+                          fn_sql=lambda e: f"quantile_cont({e}, {p})")
 
     @staticmethod
     def quantile_approx(expr, p: float, accuracy: int = 10000,
@@ -435,36 +383,24 @@ class Metric:
         Spark twin is ``percentile_approx`` (Greenwald-Khanna, mergeable
         partial states — constant memory per group at any scale). Kept
         out of hash oracles; tolerance-tested like ``uniq``."""
-        factory = _as_factory(expr)
-
-        def agg(cond: Optional[Column]) -> Column:
-            c = factory()
-            c = F.when(cond, c) if cond is not None else c
-            return F.percentile_approx(c, F.lit(p), F.lit(accuracy))
-        return Metric(agg=agg, requires=requires)
+        return Metric._of(
+            lambda c: F.percentile_approx(c, F.lit(p), F.lit(accuracy)),
+            expr, requires=requires)
 
     @staticmethod
     def collect(expr, distinct: bool = False, sort: bool = True,
                 requires=frozenset(), sql_expr=None) -> "Metric":
         """Array aggregate (SURVEY §2.4 A5). Sorted by default so results are
         deterministic under Spark's partition-order nondeterminism."""
-        factory = _as_factory(expr)
         gather = F.collect_set if distinct else F.collect_list
-
-        def agg(cond: Optional[Column]) -> Column:
-            c = factory()
-            out = gather(F.when(cond, c)) if cond is not None else gather(c)
-            return F.sort_array(out) if sort else out
-
-        e_sql = Metric._sql_of(expr, sql_expr)
-        sql = None
-        if e_sql is not None and sort:  # unsorted arrays are order-nondeterministic
-            def sql(cond_sql: Optional[str], _e=e_sql, _d=distinct) -> str:
-                inner = f"CASE WHEN {cond_sql} THEN {_e} END" if cond_sql else _e
-                kw = "DISTINCT " if _d else ""
-                # list_filter: collect_list/-set skip NULL inputs; list() keeps them
-                return f"list_sort(list_filter(list({kw}{inner}), x -> x IS NOT NULL))"
-        return Metric(agg=agg, requires=requires, sql=sql)
+        kw = "DISTINCT " if distinct else ""
+        return Metric._of(
+            (lambda c: F.sort_array(gather(c))) if sort else gather,
+            (expr, sql_expr), requires=requires,
+            # unsorted arrays are order-nondeterministic: no twin.
+            # list_filter: collect_list/-set skip NULL inputs; list() keeps them
+            fn_sql=(lambda e: f"list_sort(list_filter(list({kw}{e}), "
+                              f"x -> x IS NOT NULL))") if sort else None)
 
     @staticmethod
     def top_tuples(order_expr, struct_fields: dict[str, Any], k: int,
@@ -476,17 +412,15 @@ class Metric:
         order_f = _as_factory(order_expr)
         fields = {name: _as_factory(e) for name, e in struct_fields.items()}
 
-        def agg(cond: Optional[Column]) -> Column:
-            # Sort key leads the struct so sort_array orders by it.
-            st = F.struct(order_f().alias("__ord"),
-                          *[fields[n]().alias(n) for n in fields])
-            if cond is not None:
-                st = F.when(cond, st)
+        def tuples(st: Column) -> Column:
             arr = F.slice(F.sort_array(F.collect_list(st), asc=False), 1, k)
             # strip the sort key; keep declared tuple fields
             return F.transform(arr, lambda s: F.struct(*[s[n].alias(n) for n in fields]))
-        return Metric(agg=agg, requires=requires,
-                      tuple_fields=tuple(struct_fields))
+        # the sort key leads the struct so sort_array orders by it; the
+        # conditional form nulls the whole struct
+        return Metric._of(tuples, lambda: F.struct(
+            order_f().alias("__ord"), *[fields[n]().alias(n) for n in fields]),
+            requires=requires, tuple_fields=tuple(struct_fields))
 
 
 @dataclass
@@ -503,8 +437,7 @@ class Selector:
     sql: Optional[str] = None
 
     def __post_init__(self) -> None:
-        if self.sql is None and isinstance(self.expr, str):
-            self.sql = self.expr
+        self.sql = _sql_twin(self.expr, self.sql)
         self.expr = _as_factory(self.expr)
 
     def predicate(self, op: str, value: Any) -> Column:

@@ -65,11 +65,7 @@ def build_daily_sales_rollup(spark: SparkSession, source_dir: str,
 
 def _ratio(num: str, den: str):
     """Re-aggregatable average: sum(num)/sum(den), conditional-aware."""
-    def agg(cond):
-        n = F.sum(F.when(cond, F.col(num))) if cond is not None else F.sum(num)
-        d = F.sum(F.when(cond, F.col(den))) if cond is not None else F.sum(den)
-        return n / d
-    return Metric(agg=agg)
+    return Metric._of(lambda n, d: F.sum(n) / F.sum(d), num, den)
 
 
 def _sum_of(col: str):
