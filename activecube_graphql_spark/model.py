@@ -360,8 +360,18 @@ class Metric:
              x_sql=None, y_sql=None) -> "Metric":
         """Pearson correlation of two expressions (ClickHouse ``corr``) —
         the first two-argument metric; the conditional form nulls both
-        inputs so filtered rows drop from the pair set."""
-        return Metric._of(F.corr, (x_expr, x_sql), (y_expr, y_sql),
+        inputs so filtered rows drop from the pair set.
+
+        The Column side spells corr out as cov / (σx·σy) over the
+        non-null pairs, the formula of its SQL twin (DuckDB ``corr``),
+        under ``try_divide``: where either side is constant the
+        denominator is 0 and the result is NULL, as in DuckDB, where
+        Spark's own ``corr`` raises ANSI DIVIDE_BY_ZERO."""
+        def pearson(x: Column, y: Column) -> Column:
+            x, y = F.when(y.isNotNull(), x), F.when(x.isNotNull(), y)
+            return F.try_divide(F.covar_pop(x, y),
+                                F.stddev_pop(x) * F.stddev_pop(y))
+        return Metric._of(pearson, (x_expr, x_sql), (y_expr, y_sql),
                           requires=requires,
                           fn_sql=lambda x, y: f"corr({x}, {y})")
 

@@ -210,6 +210,19 @@ def test_collect_metric(sales, duck):
     assert_match(q, duck)
 
 
+@pytest.mark.parametrize("scoped", [True, False])
+def test_corr_with_a_constant_side_is_null(sales, duck, scoped):
+    """quantity = 5 leaves x constant in every group, so Pearson's
+    denominator is 0: both engines give NULL, for a metric-scoped
+    filter and for a query filter alike."""
+    where = {"quantity": {"eq": 5}}
+    q = sales.query().slice("returnflag")
+    q = (q.measure("qty_price_corr", where=where) if scoped
+         else q.measure("qty_price_corr").when(where))
+    assert assert_match(q, duck) == 3
+    assert [r[1] for r in q.df().collect()] == [None] * 3
+
+
 def test_by_integer_sort(events, duck):
     q = (events.query().slice("props.k_str", alias="k").measure("count")
          .option("desc_by_integer", "k").limit(3))
