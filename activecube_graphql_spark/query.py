@@ -412,7 +412,10 @@ class CubeQueryBuilder:
 
     def cache_key(self) -> str:
         """Canonical spec string — the R3 plan-cache key (the reference
-        memoizes on tree + column-map JSON, response_builder.rb:27-38)."""
+        memoizes on tree + column-map JSON, response_builder.rb:27-38).
+        A value JSON cannot hold is keyed by its ``repr``, which names
+        its type: a date and its ISO string compile to different plans
+        and print differently (``DATE '…'`` vs ``'…'``)."""
         return json.dumps({
             "cube": self.cube.name,
             "db": self.database,
@@ -424,7 +427,7 @@ class CubeQueryBuilder:
             "grouping_sets": self._grouping_sets,
             # semantics switch → distinct plan-cache entry
             "strict": self._strict_ref_compat,
-        }, default=str)
+        }, default=repr)
 
     def _filtered(self, base: DataFrame, resolver) -> DataFrame:
         """Apply the query's filters against ``resolver``'s selectors."""

@@ -206,10 +206,13 @@ def execute(cubes: dict[str, Cube], document: str,
     ValueError/TypeError/AnalysisException classes its option folds and
     Catalyst analysis raise for bad argument VALUES (e.g. limit: "x" —
     review r08 finding: a GraphQL string is lexically fine and only
-    fails inside the fold). Messages are truncated so a JVM analysis
-    trace never ships to a client. Anything else is a genuine server
-    bug and propagates to the transport's 500."""
-    from pyspark.errors import AnalysisException
+    fails inside the fold), and the Spark data exceptions (SQLSTATE
+    class 22) that a bad value raises only once its job runs (e.g.
+    shipdate: {gteq: "notadate"} → CAST_INVALID_INPUT). Messages are
+    truncated so a JVM analysis trace never ships to a client. Anything
+    else is a genuine server bug and propagates to the transport's
+    500."""
+    from pyspark.errors import AnalysisException, PySparkException
     try:
         ops = parse_operations(document, variables)
         if not ops:
@@ -231,10 +234,20 @@ def execute(cubes: dict[str, Cube], document: str,
                 "data": None}
     except (InputArgumentError, ValueError, TypeError,
             AnalysisException) as e:
-        msg = str(e)
-        if len(msg) > 500:
-            msg = msg[:500] + " …"
-        return {"errors": [{"message": msg}], "data": None}
+        return _in_band(str(e))
+    except PySparkException as e:
+        if not (e.getSqlState() or "").startswith("22"):
+            raise
+        # without the query context that follows, which names server files
+        return _in_band(str(e).split("\n== ", 1)[0])
+
+
+def _in_band(msg: str) -> dict:
+    """An input error as a GraphQL ``errors`` response, its message
+    capped at 500 characters."""
+    if len(msg) > 500:
+        msg = msg[:500] + " …"
+    return {"errors": [{"message": msg}], "data": None}
 
 
 def wsgi_app(cubes: dict[str, Cube], database: str = "default"):

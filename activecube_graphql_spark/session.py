@@ -208,17 +208,8 @@ def get_spark(app_name: str = "activecube-graphql-spark",
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Arrow for every pandas_udf / toPandas boundary (10-100x vs pickling).
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # wide sketch aggregates (64-128 buffers) must stay in codegen
-        .config("spark.sql.codegen.maxFields", "256")
-        # Timestamps in fixtures are timestamp[us/ns]; keep NTZ-free behavior
-        # deterministic across engines.
-        .config("spark.sql.session.timeZone", "UTC")
-        # Fixture `events.ts` is parquet timestamp[ns]; Spark has no nanos
-        # type — read as epoch-nanos long, cubes convert to microsecond
-        # timestamps (FIXTURES.md note on ns truncation).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # the read-path confs, documented where they are declared
+        .config(map=RUNTIME_CONFS)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # managed tables (bucketed backings, plans/bucketing.py) live
         # outside the repo; in-memory catalog, so the dir is the only state

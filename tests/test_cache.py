@@ -5,6 +5,7 @@ once)."""
 
 from __future__ import annotations
 
+import datetime
 import sys
 import threading
 
@@ -128,6 +129,21 @@ def test_plan_cache_is_bounded_and_keeps_the_hot_spec(spark, sf_dir):
     assert len(cube.plan_cache) == 128
     assert hot().cache_key() in cube.plan_cache
     assert hot().df() is hot_df
+
+
+def test_plan_cache_keys_values_by_type(spark, sf_dir):
+    """A date and its ISO string print differently (DATE '…' vs '…'), so
+    they never share a plan-cache entry."""
+    cube = SalesCube(spark, sf_dir)
+
+    def q(v):
+        return (cube.query().slice("returnflag").measure("count")
+                .when({"shipdate": {"lteq": v}}))
+
+    as_date, as_str = q(datetime.date(1998, 1, 1)), q("1998-01-01")
+    assert as_date.to_sql() != as_str.to_sql()
+    assert as_date.cache_key() != as_str.cache_key()
+    assert as_date.df() is not as_str.df()
 
 
 def test_aliased_identical_fields_share_one_plan(spark, sf_dir):

@@ -48,7 +48,12 @@ DIMS = ["returnflag", "linestatus", "orderstatus", "orderpriority",
         "nation.initial", "parttype.word1"]
 
 MEASURES = ["count", "quantity", "revenue", "avg_price", "min_price",
-            "max_price", "avg_discount", "orders", "parts"]
+            "max_price", "avg_discount", "orders", "parts",
+            # the SQL twins of these carry the metric-scoped CASE WHEN on
+            # their own inputs: only the ordering key for arg_max/arg_min
+            # (_ROW_KEY, unique per row), both inputs for corr
+            "median_price", "p90_price", "stddev_price", "var_price",
+            "qty_price_corr", "last_price", "first_price", "flags"]
 
 # (selector, operator, value) pool — curated so every choice is type-valid
 PREDICATES = [

@@ -152,6 +152,33 @@ def test_malformed_limit_by_is_an_in_band_error(cubes):
     assert len(out["data"]["sales"]) == 3
 
 
+def test_spark_data_exceptions_are_in_band(cubes, monkeypatch):
+    """A bad argument value that Spark rejects only when the job runs (a
+    SQLSTATE class 22 data exception) is answered in-band; any other
+    Spark error is a server bug and still propagates."""
+    app = wsgi_app(cubes)
+    for args in ['shipdate: {gteq: "notadate"}', 'quantity: {gteq: "abc"}']:
+        status, out = _post(app, {
+            "query": "query { sales(%s) { returnflag count } }" % args})
+        assert status.startswith("200"), args
+        assert out["data"] is None, out
+        msg = out["errors"][0]["message"]
+        assert "CAST_INVALID_INPUT" in msg and len(msg) <= 502, msg
+        assert "== DataFrame ==" not in msg and ".py" not in msg, msg
+
+    from pyspark.errors import PySparkException
+
+    class Bug(PySparkException):
+        def getSqlState(self):
+            return "XX000"
+
+    def boom(compiled):
+        raise Bug("internal error")
+    monkeypatch.setattr("activecube_graphql_spark.server._collect_field", boom)
+    with pytest.raises(Bug):
+        _post(app, {"query": "query { sales { count } }"})
+
+
 # ------------------------------------------------------------ introspection
 
 def test_introspection_loads_in_real_client(cubes):
