@@ -1,13 +1,16 @@
 """The engine's one memo discipline: :class:`Memo`, a bounded,
 thread-safe LRU behind every engine memo (metadata and analyzed plans,
-never query results), and :func:`file_identity`, the stale-proof key
-for source files."""
+never query results), :func:`file_identity`, the stale-proof key for
+source files, and :func:`frame_over`, the one way a memoized plan
+becomes a DataFrame again."""
 
 import os
 import stat
 import threading
 from collections import OrderedDict
 from typing import Any, Callable, Hashable, Optional
+
+from pyspark.sql import DataFrame, SparkSession
 
 #: entries per memo: far above any serving workload's working set, it
 #: only bounds a long-lived process that keeps seeing new keys
@@ -74,3 +77,21 @@ def file_identity(path: str) -> Optional[tuple]:
             files.append((os.path.relpath(full, path),
                           fst.st_size, fst.st_mtime_ns))
     return (path, tuple(files))
+
+
+def frame_over(spark: SparkSession, plan: Any) -> DataFrame:
+    """A new DataFrame (``Dataset.ofRows``) over a memoized analyzed
+    logical plan, so a memo hands out plans and never a DataFrame that
+    a caller may already have executed (collecting an executed frame
+    again reuses its shuffle files: rows from before a rewrite).
+
+    The Dataset gets a clone of ``plan``; a clone stays marked analyzed,
+    so nothing is analyzed again. The clone's root drops the Dataset-id
+    tag it copied: every Dataset adds its id to that tag's set on its
+    root (the ambiguous-self-join check reads it), and on the memoized
+    root the set would grow by one id per hit for the life of the entry
+    and be written from concurrent field threads."""
+    dataset = spark._jvm.org.apache.spark.sql.classic.Dataset
+    root = plan.clone()
+    root.unsetTagValue(dataset.DATASET_ID_TAG())
+    return DataFrame(dataset.ofRows(spark._jsparkSession, root), spark)

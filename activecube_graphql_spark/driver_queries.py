@@ -53,8 +53,8 @@ def _rev_if(cond: str) -> str:
 #: Cube instances per (session, sf_dir) — the deployment shape (a
 #: serving process holds long-lived cubes, as the reference gem lives in
 #: a persistent GraphQL server) under which the R3 plan cache skips
-#: ~0.5 s of per-call Catalyst analysis (r08). A cached plan pins the
-#: file listing made at first analysis (immutable fixtures here).
+#: ~0.5 s of per-call Catalyst analysis (r08). A cached plan is keyed
+#: on its source files' identities, so a rewritten file recompiles.
 _CUBES = Memo()
 
 

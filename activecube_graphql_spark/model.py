@@ -553,8 +553,10 @@ class Cube:
         #: alternative physical backings (SURVEY §4.3), cheapest-cost wins
         self.representations: list[Representation] = []
         #: compiled-plan cache (R3 — response_builder.rb:27-38 analogue):
-        #: canonical query spec → (analyzed DataFrame, chosen
-        #: representation or None = raw)
+        #: canonical query spec plus the file identity of every source
+        #: path it reads → (analyzed logical plan, chosen representation
+        #: or None = raw). It holds plans, never a DataFrame: every hit
+        #: gets a new DataFrame over the plan (``cache.frame_over``).
         self.plan_cache = Memo()
 
     def add_representation(self, rep: Representation) -> None:
@@ -635,6 +637,22 @@ class Cube:
                 other = F.broadcast(other)
             df = df.join(other, on=j.on(), how=j.how)
         return df
+
+    def source_paths(self, database: str, required: frozenset[str],
+                     reps: list[Representation]) -> list[str]:
+        """The path of every table :meth:`table` reads for ``required``
+        and :meth:`rep_table` reads for each of ``reps`` — what the plan
+        cache keys a query's source identity on."""
+        tables = self.base_tables or [self.base_table]
+        paths = [self.source.path(database, t) for t in tables]
+        paths += [self.source.path(database, j.table)
+                  for j in self.star_joins(required)]
+        for rep in reps:
+            paths.append(rep.path if rep.path is not None
+                         else self.source.path(database, rep.table))
+            paths += [self.source.path(database, j.table)
+                      for j in rep.joins]
+        return paths
 
     # -- element lookup with fail-fast validation (parse_tree.rb:30,33) -----
     def dimension(self, name: str) -> Dimension:

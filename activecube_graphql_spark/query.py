@@ -27,6 +27,13 @@ chosen *representation* — the raw star schema or the cheapest covering
 pre-aggregation (SURVEY §4.3). That late binding is what makes
 aggregate-table selection and the compiled-plan cache (R3) possible.
 
+The plan cache (``Cube.plan_cache``) holds the *analyzed logical plan*
+and its representation, keyed on the spec plus the file identity of
+every source path the query reads, so a rewritten table recompiles.
+Every ``df()`` hit returns a new DataFrame over that plan: no caller
+collects a frame another caller already executed, and no entry keeps a
+Dataset or its query execution alive.
+
 Compilation is declarative end-to-end: ``filter → groupBy → agg →
 (ordered option fold)`` on DataFrames, so Catalyst performs predicate
 pushdown, column pruning, partial aggregation, and AQE re-planning without
@@ -47,6 +54,7 @@ from typing import Any, Callable, NamedTuple, Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .cache import file_identity, frame_over
 from .errors import InputArgumentError
 from .functions.selector_ops import OPERATORS, applicable_operator
 from .model import Cube, Representation
@@ -155,7 +163,8 @@ def parse_filter(cube: Cube, args: dict) -> Filter:
     * any: [grp, grp, ...]    → OR of AND-groups      (F6, :117-118,162-183)
 
     A scalar ``in``/``not_in`` value becomes a one-element list (GraphQL
-    list input coercion)."""
+    list input coercion). Value shapes no operator can compile are
+    rejected here (:func:`_check_value`), before any plan is built."""
     _check_injection(args)
     names: dict[str, None] = {}
     return Filter(_parse_terms(cube, args, names), tuple(names))
@@ -188,8 +197,35 @@ def _parse_terms(cube: Cube, args: dict, names: dict) -> tuple:
                 continue
             if op in ("in", "not_in") and not isinstance(v, (list, tuple)):
                 v = [v]
+            _check_value(attr, op, v)
             terms.append(Term(attr, op, v))
     return tuple(terms)
+
+
+#: operators whose value is a match pattern
+_PATTERN_OPERATORS = frozenset({"like", "not_like", "ilike", "not_ilike"})
+
+
+def _check_value(attr: str, op: str, value: Any) -> None:
+    """Reject a value shape that Spark would refuse or reinterpret, so
+    the Column compiler and the SQL printer agree: a mapping under any
+    operator, a non-string pattern, or an ``in``/``not_in`` element
+    that is itself a list or mapping (``isin`` would flatten it).
+    Validates only; a value that passes is compiled as written."""
+    if isinstance(value, dict):
+        raise InputArgumentError(
+            f"'{attr}': operator '{op}' takes no mapping value, "
+            f"got {value!r}")
+    if op in _PATTERN_OPERATORS and not isinstance(value, str):
+        raise InputArgumentError(
+            f"'{attr}': operator '{op}' expects a string pattern, "
+            f"got {value!r}")
+    if op in ("in", "not_in"):
+        for v in value:
+            if isinstance(v, (dict, list, tuple)):
+                raise InputArgumentError(
+                    f"'{attr}': operator '{op}' expects a list of "
+                    f"scalars, got element {v!r}")
 
 
 @dataclass
@@ -415,7 +451,13 @@ class CubeQueryBuilder:
         memoizes on tree + column-map JSON, response_builder.rb:27-38).
         A value JSON cannot hold is keyed by its ``repr``, which names
         its type: a date and its ISO string compile to different plans
-        and print differently (``DATE '…'`` vs ``'…'``)."""
+        and print differently (``DATE '…'`` vs ``'…'``). ``sources``
+        holds the file identity of every table the raw star schema or a
+        covering representation would read, so a rewrite is a miss."""
+        dims, mets, sels = self.element_names()
+        paths = self.cube.source_paths(
+            self.database, self.required_tables(),
+            self.cube.covering_representations(dims, mets, sels))
         return json.dumps({
             "cube": self.cube.name,
             "db": self.database,
@@ -427,6 +469,7 @@ class CubeQueryBuilder:
             "grouping_sets": self._grouping_sets,
             # semantics switch → distinct plan-cache entry
             "strict": self._strict_ref_compat,
+            "sources": [file_identity(p) for p in paths],
         }, default=repr)
 
     def _filtered(self, base: DataFrame, resolver) -> DataFrame:
@@ -446,7 +489,7 @@ class CubeQueryBuilder:
         filter prunes raw to one partition but can't prune the rollup.
         Falls back to declared static costs when stats are unavailable.
         A query already in the plan cache answers from its entry: the
-        representation its cached DataFrame was compiled against."""
+        representation its cached plan was compiled against."""
         if self._use_cache and self.cache_key() in self.cube.plan_cache:
             return self._cached()[1]
         dims, mets, sels = self.element_names()
@@ -486,14 +529,21 @@ class CubeQueryBuilder:
         (slices) → agg(measures) → ordered option fold → transform hooks.
         No-slice queries produce a single global row (P4); no-measure
         queries a DISTINCT projection."""
-        out = self._cached()[0] if self._use_cache else self._compile()[0]
+        if self._use_cache:
+            out = frame_over(self.cube.spark, self._cached()[0])
+        else:
+            out = self._compile()[0]
         for fn in self._transforms:
             out = fn(out)
         return out
 
-    def _cached(self) -> tuple[DataFrame, Optional[Representation]]:
+    def _cached(self) -> tuple[Any, Optional[Representation]]:
+        """This query's plan-cache entry: (analyzed plan, representation)."""
+        def compile_plan():
+            out, rep = self._compile()
+            return out._jdf.queryExecution().analyzed(), rep
         return self.cube.plan_cache.get_or_compute(self.cache_key(),
-                                                   self._compile)
+                                                   compile_plan)
 
     def _slice_cols(self, resolver) -> list:
         cols = []

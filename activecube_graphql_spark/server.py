@@ -47,6 +47,7 @@ import datetime
 import decimal
 import functools
 import json
+import re
 from concurrent.futures import ThreadPoolExecutor, wait
 from typing import Any, Callable, Optional
 
@@ -208,10 +209,12 @@ def execute(cubes: dict[str, Cube], document: str,
     review r08 finding: a GraphQL string is lexically fine and only
     fails inside the fold), and the Spark data exceptions (SQLSTATE
     class 22) that a bad value raises only once its job runs (e.g.
-    shipdate: {gteq: "notadate"} → CAST_INVALID_INPUT). Messages are
-    truncated so a JVM analysis trace never ships to a client. Anything
-    else is a genuine server bug and propagates to the transport's
-    500."""
+    shipdate: {gteq: "notadate"} → CAST_INVALID_INPUT). A Spark
+    message is cut before the analyzed plan (it lists the backing
+    table's columns) and the query context (it names server files), and
+    every message is capped, so a JVM analysis trace never ships to a
+    client. Anything else is a genuine server bug and propagates to the
+    transport's 500."""
     from pyspark.errors import AnalysisException, PySparkException
     try:
         ops = parse_operations(document, variables)
@@ -232,14 +235,13 @@ def execute(cubes: dict[str, Cube], document: str,
         # Python stack blowout is an input problem, not a server bug
         return {"errors": [{"message": "document too deeply nested"}],
                 "data": None}
-    except (InputArgumentError, ValueError, TypeError,
-            AnalysisException) as e:
+    except (InputArgumentError, ValueError, TypeError) as e:
         return _in_band(str(e))
     except PySparkException as e:
-        if not (e.getSqlState() or "").startswith("22"):
+        if not (isinstance(e, AnalysisException)
+                or (e.getSqlState() or "").startswith("22")):
             raise
-        # without the query context that follows, which names server files
-        return _in_band(str(e).split("\n== ", 1)[0])
+        return _in_band(re.split(r";\n|\n== ", str(e), maxsplit=1)[0])
 
 
 def _in_band(msg: str) -> dict:

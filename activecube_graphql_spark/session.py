@@ -222,6 +222,13 @@ def get_spark(app_name: str = "activecube-graphql-spark",
         # graph and metrics of the last 1000 executions per session —
         # heap a long-lived serving process pays for nothing
         .config("spark.sql.ui.retainedExecutions", "0")
+        # PySpark's call-site capture (`_with_origin`) wraps every
+        # Column and function call: an active-session lookup, a JVM
+        # class lookup, a conf read, two py4j calls and a failed
+        # `import IPython` each, about half the Python CPU of a compile.
+        # It only feeds the "== DataFrame ==" query context of errors,
+        # which the server strips from client messages anyway.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # same single-thread BLAS pin for real-cluster executors (no-op
         # under local[N], which inherits the driver env set above)
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS",

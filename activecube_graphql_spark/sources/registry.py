@@ -8,7 +8,9 @@ README.md:53-68). Here a database name maps to a path prefix (or any
 Scale notes: reads go through ``spark.read.parquet`` so partition discovery,
 predicate pushdown, and column pruning all apply. For a partitioned lake
 layout (e.g. ``/date=2024-01-01/``) the same registry entry picks up
-partition pruning automatically.
+partition pruning automatically. A plain parquet read builds its
+relation (file index, inferred schema) once per file identity
+(:func:`read_parquet`); every read still returns a new DataFrame.
 
 A database prefix of the form ``catalog:<name_prefix>`` routes reads
 through ``spark.table(f"{name_prefix}{table}")`` instead of a path —
@@ -26,24 +28,33 @@ from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..cache import Memo, file_identity
+from ..cache import Memo, file_identity, frame_over
 from ..errors import InputArgumentError
 from ..session import ensure_runtime_confs
 
-#: file identity → inferred schema. `spark.read.parquet` runs a footer-
-#: inference JOB per call (r17: ~100 rows × every build); ``.schema()``
-#: skips it with a byte-identical analyzed plan (fingerprint-verified).
-_PARQUET_SCHEMA_MEMO = Memo()
+#: (session, file identity) → the analyzed relation plan of
+#: ``spark.read.parquet(path)``. A plain read lists the files into a new
+#: ``InMemoryFileIndex`` (with its own copy of the Hadoop
+#: Configuration) and runs a footer-inference job; every plan built over
+#: it keeps that relation alive. Reads of an unchanged file share one
+#: relation instead, and a rewritten file has a new identity and so a
+#: new relation.
+_PARQUET_RELATIONS = Memo()
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet`` that infers a file's schema once."""
+    """``spark.read.parquet`` over one shared relation per file
+    identity. Each read gets fresh output attributes
+    (``newInstance``), as two plain reads do, so a self-join of two
+    reads still resolves; the analyzed plan is byte-identical up to
+    expression ids (fingerprint-verified)."""
     key = file_identity(path)
     if key is None:
         return spark.read.parquet(path)
-    schema = _PARQUET_SCHEMA_MEMO.get_or_compute(
-        key, lambda: spark.read.parquet(path).schema)
-    return spark.read.schema(schema).parquet(path)
+    relation = _PARQUET_RELATIONS.get_or_compute(
+        (spark._jsparkSession.sessionUUID(), key),
+        lambda: spark.read.parquet(path)._jdf.queryExecution().analyzed())
+    return frame_over(spark, relation.newInstance())
 
 
 @dataclass
@@ -76,8 +87,9 @@ class SourceRegistry:
         if target.startswith(self.CATALOG_SCHEME):
             return spark.table(target[len(self.CATALOG_SCHEME):])
         if self.format == "parquet" and not self.options:
-            # plain parquet (the cube default): route through the schema
-            # memo so re-builds skip the per-read footer-inference job
+            # plain parquet (the cube default): route through the
+            # relation memo so re-builds skip the file listing and the
+            # footer-inference job of a fresh read
             return read_parquet(spark, target)
         return (spark.read.format(self.format).options(**self.options)
                 .load(target))

@@ -1,15 +1,18 @@
 """The engine's one memo discipline (cache.py): a bounded, thread-safe
 LRU plus a stale-proof file key, and the cube-level behaviour built on
 it (plan cache bound, one entry per spec, representation choice paid
-once)."""
+once, a hit that sees a table rewrite and runs its own jobs, one shared
+relation per unchanged file)."""
 
 from __future__ import annotations
 
 import datetime
+import shutil
 import sys
 import threading
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
@@ -123,12 +126,16 @@ def test_plan_cache_is_bounded_and_keeps_the_hot_spec(spark, sf_dir):
         return cube.query().slice("linestatus").measure("count", alias="c")
 
     hot_df = hot().df()
+    hot_plan = hot()._cached()[0]
     for i in range(129):
         cube.query().slice("returnflag").measure("count").limit(i + 1).df()
-        assert hot().df() is hot_df
+        assert hot()._cached()[0] is hot_plan
     assert len(cube.plan_cache) == 128
     assert hot().cache_key() in cube.plan_cache
-    assert hot().df() is hot_df
+    again = hot().df()
+    assert again is not hot_df
+    assert again._jdf.queryExecution().analyzed().equals(hot_plan)
+    assert hot()._cached()[0] is hot_plan
 
 
 def test_plan_cache_keys_values_by_type(spark, sf_dir):
@@ -143,7 +150,7 @@ def test_plan_cache_keys_values_by_type(spark, sf_dir):
     as_date, as_str = q(datetime.date(1998, 1, 1)), q("1998-01-01")
     assert as_date.to_sql() != as_str.to_sql()
     assert as_date.cache_key() != as_str.cache_key()
-    assert as_date.df() is not as_str.df()
+    assert as_date._cached()[0] is not as_str._cached()[0]
 
 
 def test_aliased_identical_fields_share_one_plan(spark, sf_dir):
@@ -181,3 +188,115 @@ def test_stats_mode_estimates_sizes_once_per_spec(spark, sf_dir, tmp_path,
     # first call: one estimate for raw + one for the rollup; repeats: none
     assert counts == [2, 2, 2]
     assert len(set(names)) == 1
+
+
+def _identity(spark, obj) -> int:
+    return spark._jvm.java.lang.System.identityHashCode(obj)
+
+
+def test_plan_cache_hit_sees_a_table_rewrite(spark, sf_dir, tmp_path):
+    """A plan-cache hit after ``lineitem.parquet`` is rewritten in place
+    serves the new rows, never the rows of the plan a caller already
+    executed."""
+    src = tmp_path / "sf"
+    shutil.copytree(sf_dir, src, copy_function=shutil.copyfile)
+    cube = SalesCube(spark, str(src))
+
+    def q():
+        return cube.query().slice("returnflag").measure("count", alias="c")
+
+    rows, _ = stats_execute(q())
+    before = {r[0]: r[1] for r in rows}
+    assert sorted(before) == ["A", "N", "R"]
+    lineitem = str(src / "lineitem.parquet")
+    table = pq.read_table(lineitem)
+    pq.write_table(table.filter(pc.equal(table["l_returnflag"], "R")),
+                   lineitem)
+    rows, _ = stats_execute(q())
+    assert [tuple(r) for r in rows] == [("R", before["R"])]
+
+
+def _job_counts(spark, group: str) -> tuple[int, int, int]:
+    """(jobs, skipped stages, completed tasks) of one job group."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    jobs = [store.job(j) for j in sc.statusTracker().getJobIdsForGroup(group)]
+    return (len(jobs), sum(j.numSkippedStages() for j in jobs),
+            sum(j.numCompletedTasks() for j in jobs))
+
+
+def test_repeated_execute_skips_no_stage(spark, sf_dir):
+    """A repeated ``stats.execute`` runs the jobs and tasks its first
+    run did. (AQE's result job always skips the map stage its own
+    shuffle-stage job ran, so the first run's skipped count is not 0;
+    re-collecting an executed frame would skip the shuffle job too.)"""
+    cube = SalesCube(spark, sf_dir)
+    sc = spark.sparkContext
+    counts = []
+    for i in range(3):
+        group = f"repeat-execute-{i}"
+        sc.setJobGroup(group, "repeated stats.execute")
+        try:
+            stats_execute(cube.query().slice("returnflag")
+                          .measure("count", alias="c"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        counts.append(_job_counts(spark, group))
+    assert counts[0][0] >= 1 and counts[0][2] >= 1, counts
+    assert counts[1] == counts[0] and counts[2] == counts[0], counts
+
+
+def test_reads_of_an_unchanged_file_share_one_relation(spark, tmp_path):
+    """Every read of an unchanged file shares one relation (file index,
+    inferred schema); a rewrite gets a new one. Each read keeps its own
+    attributes, so two reads still self-join."""
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+
+    def relation(df):
+        return df._jdf.queryExecution().analyzed().relation()
+
+    a, b = read_parquet(spark, str(path)), read_parquet(spark, str(path))
+    first = relation(a)
+    assert _identity(spark, relation(b)) == _identity(spark, first)
+    assert a.join(b, a["a"] == b["a"]).count() == 2
+    pq.write_table(pa.table({"a": [1, 2, 3]}), path)
+    c = read_parquet(spark, str(path))
+    assert _identity(spark, relation(c)) != _identity(spark, first)
+    assert sorted(r.a for r in c.collect()) == [1, 2, 3]
+
+
+def test_concurrent_hits_on_one_entry_return_correct_rows(spark, sf_dir):
+    """Eight threads (more than cores, 10 µs switch interval) hit one
+    plan-cache entry at once; each gets its own DataFrame and the right
+    rows."""
+    cube = SalesCube(spark, sf_dir)
+
+    def q():
+        return (cube.query().slice("returnflag").measure("count", alias="c")
+                .when({"linestatus": "F"}))
+
+    want = sorted(tuple(r) for r in q().no_cache().df().collect())
+    q().df()
+    barrier = threading.Barrier(8, timeout=60)
+    got: list = [None] * 8
+
+    def worker(i):
+        barrier.wait()
+        got[i] = sorted(tuple(r) for r in q().df().collect())
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,))
+                   for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+            assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(old)
+    assert want and all(g == want for g in got), got
+    assert len(cube.plan_cache) == 1

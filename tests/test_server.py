@@ -179,6 +179,36 @@ def test_spark_data_exceptions_are_in_band(cubes, monkeypatch):
         _post(app, {"query": "query { sales { count } }"})
 
 
+def test_analysis_errors_carry_no_plan(cubes):
+    """An in-band AnalysisException keeps its error class and SQLSTATE
+    but not the analyzed plan after it, which lists the backing
+    table's columns."""
+    status, out = _post(wsgi_app(cubes), {
+        "query": "query { sales(shipdate: {gteq: [1, 2]}) "
+                 "{ returnflag count } }"})
+    assert status.startswith("200") and out["data"] is None, out
+    msg = out["errors"][0]["message"]
+    assert "DATATYPE_MISMATCH" in msg and "SQLSTATE" in msg, msg
+    assert "Relation [" not in msg and "l_orderkey" not in msg, msg
+
+
+@pytest.mark.parametrize("args, words", [
+    ("returnflag: {like: 5}", ["like", "string"]),
+    ("returnflag: {eq: {a: 1}}", ["eq", "mapping"]),
+    ("quantity: {in: [[1]]}", ["in", "scalars"]),
+    ("any: [{returnflag: {not_ilike: [1]}}]", ["not_ilike", "string"]),
+])
+def test_bad_value_shapes_are_in_band_input_errors(cubes, args, words):
+    """Value shapes no operator compiles are input errors answered
+    in-band before any plan is built, never a raw Py4JError or Spark
+    runtime error (HTTP 500)."""
+    status, out = _post(wsgi_app(cubes), {
+        "query": "query { sales(%s) { returnflag count } }" % args})
+    assert status.startswith("200") and out["data"] is None, out
+    msg = out["errors"][0]["message"]
+    assert all(w in msg for w in words), msg
+
+
 # ------------------------------------------------------------ introspection
 
 def test_introspection_loads_in_real_client(cubes):

@@ -253,3 +253,21 @@ def test_injection_guard_applies_to_sql_path(sales):
     with pytest.raises(InputArgumentError):
         sales.query().slice("returnflag").measure("count") \
             .when({"returnflag": "_aq.count"})
+
+
+@pytest.mark.parametrize("args", [
+    {"quantity": {"in": [[1]]}},
+    {"quantity": {"not_in": [1, {"a": 1}]}},
+    {"returnflag": {"like": 5}},
+    {"returnflag": {"eq": {"a": 1}}},
+])
+def test_bad_value_shapes_fail_before_either_path(sales, args):
+    """A value shape the Column compiler would reinterpret (``isin``
+    flattens a nested list) or Spark would refuse is rejected when the
+    filter is parsed, so the engine and the printer never disagree."""
+    from activecube_graphql_spark.errors import InputArgumentError
+    q = sales.query().slice("returnflag").measure("count")
+    with pytest.raises(InputArgumentError):
+        q.when(args)
+    with pytest.raises(InputArgumentError):
+        q.measure("revenue", where=args)

@@ -32,20 +32,31 @@ def test_stats_report_chosen_representation(spark, sf_dir, tmp_path):
 
 
 def test_plan_cache_reuses_compiled_df(spark, sf_dir):
+    """R3 memoization at the plan level: a hit wraps the one cached
+    analyzed plan (same JVM object) in a distinct DataFrame, so no
+    caller collects a frame another caller already executed."""
     cube = SalesCube(spark, sf_dir)
+    identity = spark._jvm.java.lang.System.identityHashCode
 
     def build():
         return (cube.query().slice("returnflag").measure("count", alias="c")
                 .when({"linestatus": "O"}))
 
     df1 = build().df()
+    plan = build()._cached()[0]
     df2 = build().df()
-    assert df1 is df2  # same compiled object — R3 memoization
+    assert df1 is not df2
+    assert identity(build()._cached()[0]) == identity(plan)
+    assert len(cube.plan_cache) == 1
+    for df in (df1, df2):
+        assert df._jdf.queryExecution().analyzed().equals(plan)
     assert build().no_cache().df() is not df1
+    assert len(cube.plan_cache) == 1
     # different args → different plan
     df3 = (cube.query().slice("returnflag").measure("count", alias="c")
            .when({"linestatus": "F"}).df())
-    assert df3 is not df1
+    assert not df3._jdf.queryExecution().analyzed().equals(plan)
+    assert len(cube.plan_cache) == 2
 
 
 def test_routing_decisions_observable(spark, sf_dir):

@@ -8,7 +8,9 @@ Stages (each fails the gate on error):
    (``tests/test_plans.py::test_registry_plan_invariants``, ~1-2 min:
    every row's plan and build-time actions against the rule table),
    then the engine ⟷ SQL-printer agreement tests
-   (``tests/test_sql_printer.py``, ``tests/test_semantics.py``).
+   (``tests/test_sql_printer.py``, ``tests/test_semantics.py``), then
+   ``tools/update_manifest.py --check`` (no row's ``(src, plan)``
+   fingerprint moved from ``tests/graded_manifest.json``).
 2. entry smoke — ``entry(spark)`` on a BARE session at sf0.001
    (the driver's own harness builds the session, not us).
 3. result-dtype audit — Spark vs DuckDB physical column types for every
@@ -54,6 +56,8 @@ def main() -> None:
         run("engine / SQL printer agreement", [
             py, "-m", "pytest", "tests/test_sql_printer.py",
             "tests/test_semantics.py", "-q"])
+        run("graded fingerprints unchanged",
+            [py, "tools/update_manifest.py", "--check"])
     else:
         run("pytest", [py, "-m", "pytest", "tests/", "-q"])
 

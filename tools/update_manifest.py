@@ -30,6 +30,11 @@ touching query code, or after verifying the full registry locally
 the current tree must NOT be re-stamped — pass them via ``--void name
 [name ...]`` and they get a ``"VOID"`` sentinel that never matches,
 keeping them in the never-green tier until the driver re-grades them.
+
+``--check`` writes nothing: it lists every row whose current ``(src,
+plan)`` hashes differ from the manifest (or that only one side has)
+and exits non-zero if any do — the "no fingerprint moved" check for a
+refactor.
 """
 
 from __future__ import annotations
@@ -60,7 +65,12 @@ def main() -> None:
     ap.add_argument("--void", nargs="*", default=[],
                     help="rows whose evidence predates this tree: stamp a "
                          "never-matching sentinel instead of current hashes")
+    ap.add_argument("--check", action="store_true",
+                    help="write nothing; list rows whose hashes moved and "
+                         "exit 1 if any did")
     args = ap.parse_args()
+    if args.check and args.void:
+        raise SystemExit("--check writes nothing; drop --void")
     unknown = sorted(set(args.void) - set(QUERIES))
     if unknown:
         raise SystemExit(f"--void names not in registry: {unknown}")
@@ -80,12 +90,35 @@ def main() -> None:
             # --void after any further edit to the row.
             entry["void"] = True
         manifest[name] = entry
+    if args.check:
+        raise SystemExit(check(manifest))
     with open(OUT, "w") as f:
         json.dump(manifest, f, indent=1, sort_keys=True)
         f.write("\n")
     voided = sorted(args.void)
     print(f"wrote {len(manifest)} entries to {OUT}"
           + (f" (voided: {voided})" if voided else ""))
+
+
+def check(current: dict[str, dict]) -> int:
+    """Print every row whose ``(src, plan)`` differs from the committed
+    manifest; 1 if any does, else 0."""
+    with open(OUT) as f:
+        stamped = json.load(f)
+    moved = []
+    for name in sorted(set(current) | set(stamped)):
+        now, then = current.get(name), stamped.get(name)
+        if now is None or then is None:
+            moved.append(f"{name}: only in the "
+                         f"{'manifest' if now is None else 'registry'}")
+            continue
+        keys = [k for k in ("src", "plan") if now[k] != then.get(k)]
+        if keys:
+            moved.append(f"{name}: {'+'.join(keys)} moved")
+    for line in moved:
+        print(line)
+    print(f"{len(moved)} of {len(current)} rows moved")
+    return 1 if moved else 0
 
 
 if __name__ == "__main__":
