@@ -1,13 +1,27 @@
-"""The engine's one memo discipline: :class:`Memo`, a bounded,
+"""The engine's one cache discipline: :class:`Memo`, a bounded,
 thread-safe LRU behind every engine memo (metadata and analyzed plans,
-never query results), :func:`file_identity`, the stale-proof key for
-source files, and :func:`frame_over`, the one way a memoized plan
-becomes a DataFrame again."""
+never query results), :func:`file_identity`, the one rule for whether a
+source changed, and :func:`frame_over`, the one way a memoized plan
+becomes a DataFrame again. Every cache of data-derived state and its
+validity key:
 
+* ``Cube.plan_cache``: query spec + identity of every source path.
+* ``sources.registry._PARQUET_RELATIONS``: session + file identity.
+* ``operators.dedup._MASS_MEMO`` / ``_ROUTE_MEMO``: plan fingerprint +
+  identity of every input file; a plan with a non-file leaf (in-memory
+  rows) is not memoized.
+* ``introspection._SCHEMA_CACHE``: cubes + database + identity of every
+  table they read.
+* rollup and hot/cold split parquet (``plans.preagg`` / ``segments``):
+  a ``/tmp`` directory named by :func:`identity_tag` of the source.
+* ``driver_queries._CUBES``: none; it holds cube objects, not data."""
+
+import hashlib
 import os
 import stat
 import threading
 from collections import OrderedDict
+from urllib.parse import unquote, urlparse
 from typing import Any, Callable, Hashable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,7 +71,10 @@ def file_identity(path: str) -> Optional[tuple]:
     """``(abspath, size, mtime_ns)`` of a file, or None when it can't be
     stat'd. A directory folds in ``(relative path, size, mtime_ns)`` of
     every file under it: its own stat does not change when a part file
-    is rewritten in place."""
+    is rewritten in place. ``path`` may be a ``file:`` URI, as
+    ``DataFrame.inputFiles()`` returns; other schemes can't be stat'd."""
+    if path.startswith("file:"):
+        path = unquote(urlparse(path).path)
     try:
         st = os.stat(path)
     except OSError:
@@ -77,6 +94,16 @@ def file_identity(path: str) -> Optional[tuple]:
             files.append((os.path.relpath(full, path),
                           fst.st_size, fst.st_mtime_ns))
     return (path, tuple(files))
+
+
+def identity_tag(path: str) -> str:
+    """A short digest of :func:`file_identity`, naming an on-disk cache
+    built from ``path``. Raises FileNotFoundError when ``path`` has no
+    identity: a cache named by nothing could never be invalidated."""
+    ident = file_identity(path)
+    if ident is None:
+        raise FileNotFoundError(f"no file identity for {path!r}")
+    return hashlib.md5(repr(ident).encode()).hexdigest()[:16]
 
 
 def frame_over(spark: SparkSession, plan: Any) -> DataFrame:

@@ -38,7 +38,7 @@ from typing import Any, Optional
 
 from pyspark.sql import types as T
 
-from .cache import Memo
+from .cache import Memo, file_identity
 from .model import Cube
 
 __all__ = ["schema_data", "resolve_selection", "find_type"]
@@ -276,15 +276,18 @@ class _Builder:
         }
 
 
-#: schema per (cubes, database): long-lived cubes pay the driver-side
-#: analysis (~a few hundred ms per cube) once. ``Cube`` hashes by
-#: identity, so the key itself pins the cubes.
+#: schema per (cubes, database, identity of every table they read):
+#: long-lived cubes pay the driver-side analysis (~a few hundred ms per
+#: cube) once per table version. ``Cube`` hashes by identity, so the key
+#: itself pins the cubes.
 _SCHEMA_CACHE = Memo()
 
 
 def schema_data(cubes: dict[str, Cube], database: str = "default") -> dict:
+    sources = tuple(file_identity(p) for cube in cubes.values()
+                    for p in cube.source_paths(database, None, []))
     return _SCHEMA_CACHE.get_or_compute(
-        (tuple(cubes.items()), database),
+        (tuple(cubes.items()), database, sources),
         lambda: _Builder(cubes, database).build())
 
 

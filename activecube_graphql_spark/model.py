@@ -638,11 +638,12 @@ class Cube:
             df = df.join(other, on=j.on(), how=j.how)
         return df
 
-    def source_paths(self, database: str, required: frozenset[str],
+    def source_paths(self, database: str, required: Optional[frozenset[str]],
                      reps: list[Representation]) -> list[str]:
         """The path of every table :meth:`table` reads for ``required``
-        and :meth:`rep_table` reads for each of ``reps`` — what the plan
-        cache keys a query's source identity on."""
+        (None = all joins) and :meth:`rep_table` reads for each of
+        ``reps`` — what the plan cache and the introspection schema key
+        their source identity on."""
         tables = self.base_tables or [self.base_table]
         paths = [self.source.path(database, t) for t in tables]
         paths += [self.source.path(database, j.table)

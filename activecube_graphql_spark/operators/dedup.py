@@ -38,12 +38,12 @@ eagerly.
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Any, Callable, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import Memo
+from ..cache import Memo, file_identity
 from ..session import ENGINE_PARTITIONS
 
 
@@ -179,11 +179,30 @@ def with_shingles(df: DataFrame, text_col: str = "text", n: int = 3,
 _MAX_CANDIDATE_MASS_CONF = "spark.activecube.jaccard.maxCandidateMass"
 _MAX_CANDIDATE_MASS_DEFAULT = 2e9
 
-#: Σdf² guard aggregates and auto-router decisions, keyed on the
-#: analyzed-plan fingerprint (the "same computation" identity the
-#: manifest trusts) plus the leaf input files (r16, VERDICT r15 item 8)
+#: Σdf² guard aggregates and auto-router decisions (:func:`_memoized_on`)
 _MASS_MEMO = Memo()
 _ROUTE_MEMO = Memo()
+
+
+def _memoized_on(memo: Memo, df: DataFrame, tag: str,
+                 fn: Callable[[], Any]) -> Any:
+    """``fn()``, a value computed from ``df``'s rows, memoized in
+    ``memo`` under ``df``'s plan fingerprint, ``tag`` and the identity of
+    every file its analyzed plan reads (``inputFiles()`` finds none under
+    a persisted frame). Not memoized when a leaf is not a file relation
+    (in-memory rows have no identity) or a file has no identity."""
+    from ..plans.fingerprint import plan_fingerprint
+    seq = df._jdf.queryExecution().analyzed().collectLeaves()
+    rels = [seq.apply(i) for i in range(seq.size())]
+    rels = [r.relation() for r in rels if r.nodeName() == "LogicalRelation"]
+    if len(rels) < seq.size() or any(
+            r.getClass().getSimpleName() != "HadoopFsRelation" for r in rels):
+        return fn()
+    files = sorted({f for r in rels for f in r.inputFiles()})
+    ids = tuple(file_identity(f) for f in files)
+    if not ids or None in ids:
+        return fn()
+    return memo.get_or_compute((plan_fingerprint(df), tag, ids), fn)
 
 
 def _guard_exact_join_mass(freq: DataFrame, count_col: str,
@@ -197,23 +216,16 @@ def _guard_exact_join_mass(freq: DataFrame, count_col: str,
     job — the docstrings' "prefer minhash at scale" guidance, made
     mechanical. Pass ``max_candidate_mass=float('inf')`` to run
     anyway (oracle duty on a corpus you have measured). The aggregate
-    memoizes (``_MASS_MEMO``)."""
+    memoizes (``_MASS_MEMO``, keyed by :func:`_memoized_on`)."""
     if max_candidate_mass is None:
         max_candidate_mass = float(spark.conf.get(
             _MAX_CANDIDATE_MASS_CONF,
             repr(_MAX_CANDIDATE_MASS_DEFAULT)))
     if max_candidate_mass == float("inf"):
         return
-    from ..plans.fingerprint import plan_fingerprint
-    # the fingerprint normalizes filesystem locations away ON PURPOSE
-    # (sf-dir stability for the manifest) — here that would alias two
-    # different corpora behind one memo key, so the leaf input-file
-    # set joins the key (a listing, not a job)
-    files = ",".join(sorted(freq.inputFiles()))
-    key = plan_fingerprint(freq) + "|" + count_col + "|" + files
-    mass = _MASS_MEMO.get_or_compute(key, lambda: float(freq.agg(
-        F.sum(F.col(count_col).cast("double") * F.col(count_col))
-        .alias("m")).first()["m"] or 0.0))
+    mass = _memoized_on(_MASS_MEMO, freq, count_col, lambda: float(
+        freq.agg(F.sum(F.col(count_col).cast("double") * F.col(count_col))
+                 .alias("m")).first()["m"] or 0.0))
     if mass > max_candidate_mass:
         raise ValueError(
             f"{what}: projected exact-join candidate mass "
@@ -328,10 +340,6 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
         # The DECISION memoizes (_ROUTE_MEMO): re-running the same
         # pipeline re-probed three aggregates per call, ~0.8 s of the
         # warm ngram_jaccard row at sf0.1 (r16 measurement).
-        from ..plans.fingerprint import plan_fingerprint
-        route_key = (plan_fingerprint(inv) + "|route|"
-                     + ",".join(sorted(inv.inputFiles())))
-
         def route() -> str:
             nonlocal vocab_terms, rows_to_flops
             vocab_size = int(inv.agg(
@@ -388,7 +396,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
                     vocab_terms = sorted(r["shingle"] for r in dfreq_rows)
             return "bitmap" if eligible else "index"
 
-        strategy = _ROUTE_MEMO.get_or_compute(route_key, route)
+        strategy = _memoized_on(_ROUTE_MEMO, inv, "route", route)
     from ..stats import record_routing
     record_routing("ngram_jaccard.strategy", strategy)
 

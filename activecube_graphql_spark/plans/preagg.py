@@ -28,7 +28,7 @@ from ..model import Dimension, Metric, Representation, Selector
 GRAIN_COLS = ("l_returnflag", "l_linestatus")
 
 #: Versions the BUILD LOGIC into the cache tag (ADVICE r07 item 2): the
-#: content signature alone cannot see a change in how cells are
+#: source identity alone cannot see a change in how cells are
 #: computed, so a rollup built under an older sum_revenue
 #: representation (r06 double partials, r07 decimal) would be silently
 #: reused on any warm cache. Bump on every change to the cell schema
@@ -119,16 +119,15 @@ def daily_sales_representation(path: str, cost: float) -> Representation:
 def attach_daily_rollup(cube, sf_dir: str,
                         cache_root: str = "/tmp/acgs_preagg") -> Representation:
     """Build (or reuse a previously built) rollup for ``sf_dir`` and attach
-    it to ``cube``. The cache key embeds a content signature of the
-    source fact table (segments._source_signature), so a regenerated
-    fixture or a same-basename directory never silently reuses a stale
-    rollup — idempotent per exact source content."""
+    it to ``cube``. The cache directory is named by the build-logic
+    version and ``cache.identity_tag`` of ``lineitem.parquet``, so a
+    rewritten fact table gets a new rollup; a missing one raises."""
     import json
 
-    from .segments import _source_signature
+    from ..cache import identity_tag
 
     tag = (os.path.basename(os.path.normpath(sf_dir))
-           + "-" + _source_signature(sf_dir, "lineitem.parquet")
+           + "-" + identity_tag(os.path.join(sf_dir, "lineitem.parquet"))
            + "-" + _ROLLUP_VERSION)
     out = os.path.join(cache_root, tag, "sales_daily")
     cost_file = os.path.join(cache_root, tag, "sales_daily_cost.json")

@@ -59,45 +59,17 @@ def split_events_registry(sf_dir: str, cold_path: str, hot_path: str):
                    ("default", "events_hot"): hot_path})
 
 
-def _source_signature(source_dir: str,
-                      table: str = "events.parquet") -> str:
-    """Content signature of a source table: full path + per-file
-    (relative path, size, mtime_ns) over the WHOLE tree. The walk is
-    recursive (VERDICT r4 item 8): a Hive-partitioned table is a
-    directory of ``key=value`` subdirectories, and a one-level listing
-    would stat only the partition directories — whose size/mtime need
-    not change when a file INSIDE one is rewritten in place — silently
-    reusing a stale cached split/rollup. Regenerated fixtures, a
-    different directory sharing a basename, or any nested in-place
-    rewrite all change the signature."""
-    import hashlib
-    src = os.path.join(source_dir, table)
-    parts = [os.path.abspath(src)]
-    if os.path.isdir(src):
-        for root, dirs, files in os.walk(src):
-            dirs.sort()
-            rel_root = os.path.relpath(root, src)
-            for name in sorted(files):
-                st = os.stat(os.path.join(root, name))
-                rel = os.path.join(rel_root, name)
-                parts.append(f"{rel}:{st.st_size}:{st.st_mtime_ns}")
-    else:
-        st = os.stat(src)
-        parts.append(f"{os.path.basename(src)}:{st.st_size}:"
-                     f"{st.st_mtime_ns}")
-    return hashlib.md5("|".join(parts).encode()).hexdigest()[:16]
-
-
 def attach_split_events(spark: SparkSession, sf_dir: str,
                         cache_root: str = "/tmp/acgs_segments"):
     """Build (or reuse) the split for ``sf_dir`` and return an
-    ``EventsArchiveCube`` over it. The cache key embeds a content
-    signature of the source table (path + file sizes + mtimes), so a
-    regenerated fixture or a same-basename directory never silently
-    reuses a stale split — idempotent per exact source content."""
+    ``EventsArchiveCube`` over it. The cache directory is named by
+    ``cache.identity_tag`` of ``events.parquet``, so a rewritten table
+    (nested partitions included) gets a new split; a missing one
+    raises."""
+    from ..cache import identity_tag
     from ..cubes import EventsArchiveCube
-    tag = (os.path.basename(os.path.normpath(sf_dir))
-           + "-" + _source_signature(sf_dir))
+    tag = (os.path.basename(os.path.normpath(sf_dir)) + "-"
+           + identity_tag(os.path.join(sf_dir, "events.parquet")))
     out_root = os.path.join(cache_root, tag)
     cold = os.path.join(out_root, "events_cold")
     hot = os.path.join(out_root, "events_hot")

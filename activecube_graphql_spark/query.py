@@ -27,12 +27,12 @@ chosen *representation* — the raw star schema or the cheapest covering
 pre-aggregation (SURVEY §4.3). That late binding is what makes
 aggregate-table selection and the compiled-plan cache (R3) possible.
 
-The plan cache (``Cube.plan_cache``) holds the *analyzed logical plan*
-and its representation, keyed on the spec plus the file identity of
-every source path the query reads, so a rewritten table recompiles.
-Every ``df()`` hit returns a new DataFrame over that plan: no caller
-collects a frame another caller already executed, and no entry keeps a
-Dataset or its query execution alive.
+Every ``df()`` goes through the plan cache (``Cube.plan_cache``): the
+*analyzed logical plan* and its representation, keyed on the spec plus
+the ``cache.file_identity`` of every source path the query may read, so
+a rewritten table recompiles. Each call returns a new DataFrame over the
+plan: no caller collects a frame another caller already executed, and no
+entry keeps a Dataset or its query execution alive.
 
 Compilation is declarative end-to-end: ``filter → groupBy → agg →
 (ordered option fold)`` on DataFrames, so Catalyst performs predicate
@@ -256,7 +256,6 @@ class CubeQueryBuilder:
         self._transforms: list[Callable[[DataFrame], DataFrame]] = []
         self._grouping_mode: str = "groupby"
         self._grouping_sets: Optional[list[tuple[str, ...]]] = None
-        self._use_cache: bool = True
         self._strict_ref_compat: bool = False
 
     # ------------------------------------------------------------------ API
@@ -356,10 +355,6 @@ class CubeQueryBuilder:
         """Pre-execution query rewrite hook (S3 — ``append_cube_query``,
         cube_field.rb:50), applied to the compiled DataFrame."""
         self._transforms.append(fn)
-        return self
-
-    def no_cache(self) -> "CubeQueryBuilder":
-        self._use_cache = False
         return self
 
     def strict_reference_compat(self, on: bool = True) -> "CubeQueryBuilder":
@@ -490,7 +485,7 @@ class CubeQueryBuilder:
         Falls back to declared static costs when stats are unavailable.
         A query already in the plan cache answers from its entry: the
         representation its cached plan was compiled against."""
-        if self._use_cache and self.cache_key() in self.cube.plan_cache:
+        if self.cache_key() in self.cube.plan_cache:
             return self._cached()[1]
         dims, mets, sels = self.element_names()
         candidates = self.cube.covering_representations(dims, mets, sels)
@@ -529,10 +524,7 @@ class CubeQueryBuilder:
         (slices) → agg(measures) → ordered option fold → transform hooks.
         No-slice queries produce a single global row (P4); no-measure
         queries a DISTINCT projection."""
-        if self._use_cache:
-            out = frame_over(self.cube.spark, self._cached()[0])
-        else:
-            out = self._compile()[0]
+        out = frame_over(self.cube.spark, self._cached()[0])
         for fn in self._transforms:
             out = fn(out)
         return out

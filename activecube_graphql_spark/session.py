@@ -14,7 +14,7 @@ from pyspark.sql import SparkSession
 
 
 #: The engine's one host-independent partition count: ``get_spark``'s
-#: ``spark.sql.shuffle.partitions`` default and the fan-out that
+#: ``spark.sql.shuffle.partitions`` and the fan-out that
 #: ``operators.dedup.ensure_parallelism`` and the salted join in
 #: ``plans/skew.py`` write into a LOGICAL plan. Never the host's core
 #: count: an analyzed plan is a row's semantics (its graded-manifest
@@ -175,18 +175,15 @@ def restore_confs(spark: SparkSession, prior: dict[str, str]) -> None:
             spark.conf.set(key, val)
 
 
-def get_spark(app_name: str = "activecube-graphql-spark",
-              shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "activecube-graphql-spark") -> SparkSession:
     """Build (or reuse) the session.
 
     ``SPARK_GRAFT_CPUS`` controls local parallelism (driver contract);
     defaults to all cores. On a real cluster the master/executor settings
-    come from spark-submit and everything here still applies.
+    come from spark-submit and everything here still applies; size
+    shuffles for a cluster with :func:`apply_cluster_profile`.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE",
-                                                ENGINE_PARTITIONS))
     # Pin BLAS/OMP pools to one thread per python worker (r12, VERDICT
     # r11 item 1): Spark already runs one task per core, so any BLAS
     # threading inside a worker oversubscribes cores × threads — on a
@@ -207,7 +204,7 @@ def get_spark(app_name: str = "activecube-graphql-spark",
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(ENGINE_PARTITIONS))
         # the read-path confs, documented where they are declared
         .config(map=RUNTIME_CONFS)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -67,8 +67,7 @@ def test_bucketed_join_plans_no_exchange(bucketed_sales):
     over bucket-co-located scans: NO shuffle on the join key; the only
     Exchange left is the (tiny, post-combine) slice aggregation."""
     with _no_broadcast(bucketed_sales.spark):
-        plan = fmt(_orderpriority_query(bucketed_sales, "bucketed")
-                   .no_cache().df())
+        plan = fmt(_orderpriority_query(bucketed_sales, "bucketed").df())
     assert "SortMergeJoin" in plan
     assert "hashpartitioning(l_orderkey" not in plan
     assert "hashpartitioning(o_orderkey" not in plan
@@ -82,8 +81,7 @@ def test_parquet_path_still_shuffles(bucketed_sales):
     """Sanity for the assertion above: the same query on the plain-parquet
     database DOES shuffle both join inputs on the join key."""
     with _no_broadcast(bucketed_sales.spark):
-        plan = fmt(_orderpriority_query(bucketed_sales, "default")
-                   .no_cache().df())
+        plan = fmt(_orderpriority_query(bucketed_sales, "default").df())
     assert "SortMergeJoin" in plan
     assert "hashpartitioning(l_orderkey" in plan
     assert "hashpartitioning(o_orderkey" in plan

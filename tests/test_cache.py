@@ -1,12 +1,14 @@
-"""The engine's one memo discipline (cache.py): a bounded, thread-safe
-LRU plus a stale-proof file key, and the cube-level behaviour built on
-it (plan cache bound, one entry per spec, representation choice paid
-once, a hit that sees a table rewrite and runs its own jobs, one shared
-relation per unchanged file)."""
+"""The engine's one cache discipline (cache.py): a bounded, thread-safe
+LRU plus the one stale-proof file key, and the cube-level behaviour
+built on it (plan cache bound, one entry per spec, representation
+choice paid once, a hit that sees a table rewrite and runs its own
+jobs, one shared relation per unchanged file, introspection that sees
+a column type rewrite)."""
 
 from __future__ import annotations
 
 import datetime
+import pathlib
 import shutil
 import sys
 import threading
@@ -216,6 +218,76 @@ def test_plan_cache_hit_sees_a_table_rewrite(spark, sf_dir, tmp_path):
     assert [tuple(r) for r in rows] == [("R", before["R"])]
 
 
+def test_execute_sees_a_spark_overwrite_of_a_directory_table(
+        spark, sf_dir, tmp_path):
+    """A directory-backed table rewritten by Spark with
+    ``mode("overwrite")`` gets new part-file names and its old parts are
+    deleted: the next request serves the new rows and reads no deleted
+    file."""
+    src = tmp_path / "sf"
+    shutil.copytree(sf_dir, src, copy_function=shutil.copyfile,
+                    ignore=shutil.ignore_patterns("lineitem.parquet"))
+    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    table = str(src / "lineitem.parquet")
+    lineitem.write.parquet(table)
+    cube = SalesCube(spark, str(src))
+    doc = "query { sales { returnflag count } }"
+    before = execute({"sales": cube}, doc)
+    assert "errors" not in before, before
+    counts = {r["returnflag"]: r["count"] for r in before["data"]["sales"]}
+    assert sorted(counts) == ["A", "N", "R"]
+    old_parts = sorted(p.name for p in (src / "lineitem.parquet").iterdir())
+    lineitem.filter("l_returnflag = 'R'").write.mode("overwrite") \
+        .parquet(table)
+    assert not set(old_parts) & {
+        p.name for p in (src / "lineitem.parquet").iterdir()
+        if p.name.startswith("part-")}
+    after = execute({"sales": cube}, doc)
+    assert "errors" not in after, after
+    assert after["data"]["sales"] == [{"returnflag": "R",
+                                       "count": counts["R"]}]
+
+
+def test_type_introspection_sees_a_column_type_rewrite(spark, sf_dir,
+                                                       tmp_path):
+    """``__type`` over a cube whose ``lineitem.parquet`` is rewritten with
+    a dimension column's type changed reports the new type: the schema
+    memo keys on the identity of every table the cube reads."""
+    src = tmp_path / "sf"
+    shutil.copytree(sf_dir, src, copy_function=shutil.copyfile)
+    cube = SalesCube(spark, str(src))
+    doc = ('query { __type(name: "SalesRow") '
+           '{ fields { name type { name ofType { name } } } } }')
+
+    def returnflag_type():
+        out = execute({"sales": cube}, doc)
+        assert "errors" not in out, out
+        field, = [f for f in out["data"]["__type"]["fields"]
+                  if f["name"] == "returnflag"]
+        t = field["type"]
+        return t["name"] or t["ofType"]["name"]
+
+    assert returnflag_type() == "String"
+    lineitem = str(src / "lineitem.parquet")
+    table = pq.read_table(lineitem)
+    i = table.schema.get_field_index("l_returnflag")
+    pq.write_table(table.set_column(
+        i, "l_returnflag", pc.cast(table["l_returnflag"], pa.binary())),
+        lineitem)
+    assert returnflag_type() == "Binary"
+
+
+def test_file_identity_is_the_only_stat_key():
+    """One identity rule: no engine module but cache.py reads a file's
+    mtime, so a second, drifting validity key cannot come back
+    unnoticed."""
+    root = pathlib.Path(__file__).resolve().parents[1] \
+        / "activecube_graphql_spark"
+    readers = sorted(str(p.relative_to(root)) for p in root.rglob("*.py")
+                     if "st_mtime_ns" in p.read_text())
+    assert readers == ["cache.py"]
+
+
 def _job_counts(spark, group: str) -> tuple[int, int, int]:
     """(jobs, skipped stages, completed tasks) of one job group."""
     sc = spark.sparkContext
@@ -273,11 +345,12 @@ def test_concurrent_hits_on_one_entry_return_correct_rows(spark, sf_dir):
     rows."""
     cube = SalesCube(spark, sf_dir)
 
-    def q():
-        return (cube.query().slice("returnflag").measure("count", alias="c")
+    def q(on=cube):
+        return (on.query().slice("returnflag").measure("count", alias="c")
                 .when({"linestatus": "F"}))
 
-    want = sorted(tuple(r) for r in q().no_cache().df().collect())
+    fresh = SalesCube(spark, sf_dir)
+    want = sorted(tuple(r) for r in q(fresh).df().collect())
     q().df()
     barrier = threading.Barrier(8, timeout=60)
     got: list = [None] * 8

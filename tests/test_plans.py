@@ -344,34 +344,40 @@ def test_compaction_and_clustering(spark, tmp_path):
     assert sum(r["span"] for r in spans) / len(spans) < 97 / 2
 
 
-def test_source_signature_sees_nested_partition_rewrites(tmp_path):
+def test_file_identity_sees_nested_partition_rewrites(tmp_path):
     """A rewrite INSIDE a key=value partition subdirectory must change
-    the signature even when the partition directory's own stat is
-    unchanged — the one-level listing statted only the immediate
-    children, so a cached split/rollup could go stale under nested
-    rewrites (VERDICT r4 item 8)."""
+    the source identity (and so the tag naming a cached split/rollup)
+    even when the partition directory's own stat is unchanged — a
+    one-level listing stats only the immediate children, so a cached
+    split/rollup could go stale under nested rewrites (VERDICT r4
+    item 8)."""
     import os
     import time
 
-    from activecube_graphql_spark.plans.segments import _source_signature
+    from activecube_graphql_spark.cache import file_identity, identity_tag
 
-    src = tmp_path / "t.parquet" / "day=2024-01-01"
+    table = tmp_path / "t.parquet"
+    src = table / "day=2024-01-01"
     src.mkdir(parents=True)
     f = src / "part-0000.parquet"
     f.write_bytes(b"one")
     dir_stat = os.stat(src)
-    sig1 = _source_signature(str(tmp_path), "t.parquet")
+    id1, tag1 = file_identity(str(table)), identity_tag(str(table))
 
     time.sleep(0.01)
     f.write_bytes(b"two")           # same size, new mtime, nested
     # pin the PARTITION DIRECTORY's stat back — the adversarial case the
     # old immediate-children walk could not distinguish
     os.utime(src, ns=(dir_stat.st_atime_ns, dir_stat.st_mtime_ns))
-    sig2 = _source_signature(str(tmp_path), "t.parquet")
-    assert sig1 != sig2
+    id2, tag2 = file_identity(str(table)), identity_tag(str(table))
+    assert id1 != id2 and tag1 != tag2
 
     # stable when nothing changes
-    assert _source_signature(str(tmp_path), "t.parquet") == sig2
+    assert file_identity(str(table)) == id2
+    assert identity_tag(str(table)) == tag2
+    # a missing source names no cache
+    with pytest.raises(FileNotFoundError):
+        identity_tag(str(tmp_path / "missing.parquet"))
 
 
 def test_segmented_cube_union_and_per_segment_pushdown(spark, sf_dir, tmp_path):
@@ -579,7 +585,8 @@ def test_decontamination_measured_work_model_salts(spark):
     # the work-model threshold is max(4096, 4*ss/parts): the fixture's
     # hot shingle carries w = 70*70 = 4900, which only clears it when
     # parts >= 4*9800/4900 = 8 keeps 4*ss/parts below 4096 — pin the
-    # conf so the route fires under any SPARK_GRAFT_SHUFFLE setting
+    # conf so the route fires whatever partition count the session
+    # carries (a cluster profile may have lowered it)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "32")
     try:

@@ -124,7 +124,7 @@ def cube_queries(draw):
 
 
 def build(spec):
-    q = _SALES.query().no_cache()
+    q = _SALES.query()
     keys = []
     for s in spec["slices"]:
         q = q.slice(s)
@@ -253,7 +253,7 @@ def _events_cube(spark):
           suppress_health_check=[HealthCheck.too_slow])
 @given(events_queries())
 def test_random_events_query_matches_duckdb(spec):
-    q = _EVENTS.query().no_cache()
+    q = _EVENTS.query()
     keys = []
     for s in spec["slices"]:
         q = q.slice(s)
@@ -320,7 +320,7 @@ def docs_queries(draw):
           suppress_health_check=[HealthCheck.too_slow])
 @given(docs_queries())
 def test_random_docs_query_matches_duckdb(spec):
-    q = _DOCS.query().no_cache()
+    q = _DOCS.query()
     keys = []
     for s in spec["slices"]:
         q = q.slice(s)

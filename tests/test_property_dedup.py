@@ -16,6 +16,7 @@ from __future__ import annotations
 import re
 from itertools import combinations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -292,16 +293,19 @@ def test_duplicate_spans_leaves_no_cache(spark):
         f"{len(after) - len(before)} cached frame(s)")
 
 
-def test_mass_guard_memoizes_per_plan(spark):
+def test_mass_guard_memoizes_per_plan(spark, tmp_path):
     """r16 (VERDICT r15 item 8): the candidate-mass guard's Σdf²
-    aggregate memoizes on the freq frame's analyzed-plan fingerprint —
-    the second call over the same plan must answer from the memo
-    without launching a Spark job (job-counted via a dedicated job
-    group), while a DIFFERENT plan misses the memo and runs."""
+    aggregate memoizes on the freq frame's analyzed-plan fingerprint
+    plus its input files' identities — the second call over the same
+    file-backed plan must answer from the memo without launching a
+    Spark job (job-counted via a dedicated job group), while a
+    DIFFERENT plan misses the memo and runs."""
     from activecube_graphql_spark.operators import dedup as dd
 
-    freq = _df(spark, ["aa bb cc", "aa bb", "dd"]).selectExpr(
-        "doc_id % 2 AS shingle", "doc_id AS df")
+    path = str(tmp_path / "freq.parquet")
+    _df(spark, ["aa bb cc", "aa bb", "dd"]).selectExpr(
+        "doc_id % 2 AS shingle", "doc_id AS df").write.parquet(path)
+    freq = spark.read.parquet(path)
     dd._MASS_MEMO.clear()
 
     def jobs_during(fn):
@@ -347,3 +351,55 @@ def test_mass_guard_memoizes_per_plan(spark):
     # fewer jobs than the miss, and no new memo entry
     assert n6 - n5 < n5 - n4, "the repeat over the same corpus must hit"
     assert len(dd._MASS_MEMO) == size4 + 1
+    # a persisted frame hides its files from inputFiles(); the key reads
+    # them from the analyzed plan, so the same corpus still hits
+    persisted = freq_for("/root/testdata/sf0.01").persist()
+    try:
+        n7 = jobs_during(lambda: dd._guard_exact_join_mass(
+            persisted, "df", spark, None, "m"))
+    finally:
+        persisted.unpersist()
+    assert n7 - n6 < n5 - n4, "a persisted frame over the corpus must hit"
+    assert len(dd._MASS_MEMO) == size4 + 1
+
+
+def _shingle_freq(spark, df):
+    return spark.createDataFrame([("aa", df)], "shingle string, c long")
+
+
+def test_mass_guard_does_not_alias_in_memory_frames(spark):
+    """Two in-memory frames with one plan shape and different rows: the
+    fingerprint cannot tell them apart and they have no input files,
+    so the light frame's mass must not be served from the heavy
+    frame's guard run."""
+    from activecube_graphql_spark.operators import dedup as dd
+
+    dd._MASS_MEMO.clear()
+    with pytest.raises(ValueError, match="mass 1.000e\\+04"):
+        dd._guard_exact_join_mass(_shingle_freq(spark, 100), "c", spark,
+                                  50.0, "heavy")
+    dd._guard_exact_join_mass(_shingle_freq(spark, 1), "c", spark,
+                              50.0, "light")
+    assert len(dd._MASS_MEMO) == 0
+
+
+def test_mass_guard_sees_an_in_place_corpus_rewrite(spark, tmp_path):
+    """A file-backed freq frame rewritten in place (same file name) gets
+    its mass recomputed: the memo key names the file's identity, not
+    its path."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from activecube_graphql_spark.operators import dedup as dd
+
+    path = str(tmp_path / "freq.parquet")
+    dd._MASS_MEMO.clear()
+    pq.write_table(pa.table({"shingle": ["aa"], "c": [1]}), path)
+    dd._guard_exact_join_mass(spark.read.parquet(path), "c", spark,
+                              50.0, "light")
+    assert len(dd._MASS_MEMO) == 1
+    pq.write_table(pa.table({"shingle": ["aa", "bb"], "c": [100, 100]}),
+                   path)
+    with pytest.raises(ValueError, match="mass 2.000e\\+04"):
+        dd._guard_exact_join_mass(spark.read.parquet(path), "c", spark,
+                                  50.0, "heavy")

@@ -139,8 +139,7 @@ def test_null_safe_ops(sales, duck):
 def test_option_order_desc_then_limit_vs_reverse(sales, duck):
     """O5: [desc, limit] ≠ [limit, desc] — printed SQL must preserve the
     fold order via subquery nesting, matching the DataFrame fold."""
-    base = lambda: (sales.query().slice("orderdate.year").measure("count")
-                    .no_cache())
+    base = lambda: sales.query().slice("orderdate.year").measure("count")
     q1 = base().desc("count").limit(2)
     n1 = assert_match(q1, duck)
     assert n1 == 2
