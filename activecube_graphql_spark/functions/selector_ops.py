@@ -46,8 +46,6 @@ def apply_operator(col: Column, op: str, value: Any) -> Column:
     ``eq None`` ≡ IS NULL, ``not_eq None`` ≡ IS NOT NULL; ``is``/``not`` are
     the null-safe (<=>) variants for non-nil arguments.
     """
-    if op not in OPERATORS:
-        raise InputArgumentError(f"Unsupported selector operator '{op}'")
     if op == "eq":
         return col.isNull() if value is None else col == F.lit(value)
     if op == "not_eq":
@@ -79,7 +77,7 @@ def apply_operator(col: Column, op: str, value: Any) -> Column:
         return col.ilike(value)
     if op == "not_ilike":
         return ~col.ilike(value)
-    raise InputArgumentError(f"Unsupported selector operator '{op}'")  # pragma: no cover
+    raise InputArgumentError(f"Unsupported selector operator '{op}'")
 
 
 # ------------------------------------------------------------------ SQL twin
@@ -110,8 +108,6 @@ def operator_sql(expr: str, op: str, value: Any) -> str:
     comparison, ≙ Spark ``eqNullSafe``); ``eq/not_eq`` on a nil argument
     become ``IS [NOT] NULL`` exactly as the Column path does.
     """
-    if op not in OPERATORS:
-        raise InputArgumentError(f"Unsupported selector operator '{op}'")
     if op == "eq":
         return f"({expr} IS NULL)" if value is None else f"({expr} = {literal_sql(value)})"
     if op == "not_eq":
@@ -147,4 +143,4 @@ def operator_sql(expr: str, op: str, value: Any) -> str:
         return f"({expr} ILIKE {literal_sql(value)})"
     if op == "not_ilike":
         return f"(NOT ({expr} ILIKE {literal_sql(value)}))"
-    raise InputArgumentError(f"Unsupported selector operator '{op}'")  # pragma: no cover
+    raise InputArgumentError(f"Unsupported selector operator '{op}'")

@@ -101,7 +101,11 @@ def _tokenize(text: str) -> list[tuple[str, Any]]:
             continue
         val: Any = m.group()
         if kind == "int":
-            val = int(val)
+            try:
+                val = int(val)
+            except ValueError:  # past Python's int-string digit limit
+                raise InputArgumentError(
+                    f"GraphQL: integer literal of {len(val)} digits") from None
         elif kind == "float":
             val = float(val)
         elif kind == "string":
@@ -435,13 +439,11 @@ class _Parser:
 
 def field_spec(node: dict) -> dict:
     """A parsed top-level field node → ParseTree dict spec (the field's
-    args become root args; an ``options:`` object keeps client order as
-    a list of pairs). Shared by :func:`parse_graphql` and the HTTP
+    args become root args; an ``options:`` object stays the mapping it
+    is, in client order). Shared by :func:`parse_graphql` and the HTTP
     transport's per-root-field dispatch (server.py)."""
     spec: dict[str, Any] = {"fields": node.get("fields") or {}}
-    args = dict(node.get("args") or {})
-    if "options" in args and isinstance(args["options"], dict):
-        args["options"] = list(args["options"].items())
+    args = node.get("args") or {}
     if args:
         spec["args"] = args
     return spec

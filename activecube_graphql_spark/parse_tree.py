@@ -162,29 +162,22 @@ class ParseTree:
                 if el.args:
                     q.when(el.args)  # dimension args filter globally
         # root args: selectors + ordered options (parse_tree.rb:99)
-        options = None
-        selector_args = {}
-        for k, v in self.root_args.items():
-            if k == "options":
-                options = v
-            else:
-                selector_args[k] = v
+        selector_args = {k: v for k, v in self.root_args.items()
+                         if k != "options"}
         if selector_args:
             q.when(selector_args)
+        options = self.root_args.get("options")
         if options is not None:
-            # an options payload is an ORDERED mapping: a dict, or a
-            # list of (name, args) pairs (how the GraphQL front-end
-            # preserves client order). Anything else — or a malformed
-            # pair — is an input error, not an unpack crash (fuzz).
-            if isinstance(options, dict):
-                items = list(options.items())
-            elif isinstance(options, (list, tuple)):
-                items = list(options)
-            else:
+            # an options payload is an ORDERED mapping: a dict (what the
+            # GraphQL front-end passes), or a list of (name, args) pairs.
+            # Anything else — or a malformed pair — is an input error,
+            # not an unpack crash (fuzz).
+            if not isinstance(options, (dict, list, tuple)):
                 raise InputArgumentError(
                     "options: expects a mapping or a list of "
                     f"(name, args) pairs, got {type(options).__name__}")
-            for item in items:
+            for item in (options.items() if isinstance(options, dict)
+                         else options):
                 if (not isinstance(item, (list, tuple))
                         or len(item) != 2
                         or not isinstance(item[0], str)):

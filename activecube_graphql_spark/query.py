@@ -75,16 +75,27 @@ def _camelize_lower(name: str) -> str:
     return head + "".join(p[:1].upper() + p[1:] for p in rest)
 
 
-def _check_injection(value: Any) -> Any:
-    """parse_tree.rb:113-114 — reject argument values smuggling path keys."""
-    if isinstance(value, str) and PATH_PREFIX in value:
-        raise InputArgumentError(f"Unexpected value {value!r} for an argument")
-    if isinstance(value, (list, tuple)):
+def _check_literals(value: Any) -> Any:
+    """Reject, at any depth of an argument, a string smuggling a path key
+    (parse_tree.rb:113-114) or not valid Unicode (py4j cannot carry a
+    lone surrogate), and an integer outside int64 (Spark's widest)."""
+    if isinstance(value, str):
+        if PATH_PREFIX in value:
+            raise InputArgumentError(
+                f"Unexpected value {value!r} for an argument")
+        try:
+            value.encode()
+        except UnicodeEncodeError:
+            raise InputArgumentError(
+                f"string argument {value!r} is not valid Unicode") from None
+    elif isinstance(value, int) and not -2**63 <= value < 2**63:
+        raise InputArgumentError("integer argument outside the 64-bit range")
+    elif isinstance(value, (list, tuple)):
         for v in value:
-            _check_injection(v)
-    if isinstance(value, dict):
+            _check_literals(v)
+    elif isinstance(value, dict):
         for v in value.values():
-            _check_injection(v)
+            _check_literals(v)
     return value
 
 
@@ -165,7 +176,7 @@ def parse_filter(cube: Cube, args: dict) -> Filter:
     A scalar ``in``/``not_in`` value becomes a one-element list (GraphQL
     list input coercion). Value shapes no operator can compile are
     rejected here (:func:`_check_value`), before any plan is built."""
-    _check_injection(args)
+    _check_literals(args)
     names: dict[str, None] = {}
     return Filter(_parse_terms(cube, args, names), tuple(names))
 
@@ -206,13 +217,18 @@ def _parse_terms(cube: Cube, args: dict, names: dict) -> tuple:
 _PATTERN_OPERATORS = frozenset({"like", "not_like", "ilike", "not_ilike"})
 
 
+def _has_mapping(value: Any) -> bool:
+    return isinstance(value, dict) or (
+        isinstance(value, (list, tuple)) and any(map(_has_mapping, value)))
+
+
 def _check_value(attr: str, op: str, value: Any) -> None:
-    """Reject a value shape that Spark would refuse or reinterpret, so
-    the Column compiler and the SQL printer agree: a mapping under any
-    operator, a non-string pattern, or an ``in``/``not_in`` element
-    that is itself a list or mapping (``isin`` would flatten it).
-    Validates only; a value that passes is compiled as written."""
-    if isinstance(value, dict):
+    """Reject a value shape Spark would refuse or reinterpret, so the
+    Column compiler and the SQL printer agree: a mapping at any depth, a
+    non-string pattern, a ``between`` not of two bounds, or a list inside
+    ``in``/``not_in``/``between`` (``isin`` would flatten it). Validates
+    only; a value that passes is compiled as written."""
+    if _has_mapping(value):
         raise InputArgumentError(
             f"'{attr}': operator '{op}' takes no mapping value, "
             f"got {value!r}")
@@ -220,12 +236,16 @@ def _check_value(attr: str, op: str, value: Any) -> None:
         raise InputArgumentError(
             f"'{attr}': operator '{op}' expects a string pattern, "
             f"got {value!r}")
-    if op in ("in", "not_in"):
-        for v in value:
-            if isinstance(v, (dict, list, tuple)):
-                raise InputArgumentError(
-                    f"'{attr}': operator '{op}' expects a list of "
-                    f"scalars, got element {v!r}")
+    if op == "between" and not (isinstance(value, (list, tuple))
+                                and len(value) == 2):
+        raise InputArgumentError(
+            f"'{attr}': operator 'between' expects two bounds "
+            f"[low, high], got {value!r}")
+    if op in ("in", "not_in", "between") \
+            and any(isinstance(v, (list, tuple)) for v in value):
+        raise InputArgumentError(
+            f"'{attr}': operator '{op}' expects a list of scalars, "
+            f"got {value!r}")
 
 
 @dataclass
@@ -307,7 +327,7 @@ class CubeQueryBuilder:
         if name not in _OPTION_PARSERS:
             raise InputArgumentError(f"Option '{name}' is not supported")
         self._options.append(
-            (name, _OPTION_PARSERS[name](_check_injection(args))))
+            (name, _OPTION_PARSERS[name](_check_literals(args))))
         return self
 
     # convenience sugar
@@ -344,10 +364,10 @@ class CubeQueryBuilder:
         if mode not in ("groupby", "rollup", "cube", "sets"):
             raise InputArgumentError(f"Unknown grouping mode '{mode}'")
         if mode == "sets":
-            if not sets:
+            if not sets or not isinstance(sets, (list, tuple)):
                 raise InputArgumentError(
                     "grouping('sets') requires sets=[[name, ...], ...]")
-            self._grouping_sets = [_path_keys(s) for s in sets]
+            self._grouping_sets = [_path_keys(s, empty=True) for s in sets]
         self._grouping_mode = mode
         return self
 
@@ -483,10 +503,8 @@ class CubeQueryBuilder:
         the fact table therefore still LOSES to raw when the query's
         filter prunes raw to one partition but can't prune the rollup.
         Falls back to declared static costs when stats are unavailable.
-        A query already in the plan cache answers from its entry: the
-        representation its cached plan was compiled against."""
-        if self.cache_key() in self.cube.plan_cache:
-            return self._cached()[1]
+        A pure choice: it reads no cache, and the plan cache keeps what
+        ``_compile`` chose."""
         dims, mets, sels = self.element_names()
         candidates = self.cube.covering_representations(dims, mets, sels)
         if not candidates:
@@ -665,13 +683,13 @@ class _FoldState:
     order: list[Column] = field(default_factory=list)
 
 
-def _path_keys(fields: Any) -> tuple[str, ...]:
+def _path_keys(fields: Any, empty: bool = False) -> tuple[str, ...]:
     """Option field names → path keys, so they bind to output aliases, not
     input columns (parse_tree.rb:138-147, §1.4). A bare name is a
-    one-name list."""
+    one-name list; ``empty`` admits ``[]``, a grouping set's grand total."""
     if isinstance(fields, str):
         fields = [fields]
-    if not isinstance(fields, (list, tuple)) \
+    if not isinstance(fields, (list, tuple)) or not (fields or empty) \
             or not all(isinstance(f_, str) for f_ in fields):
         raise InputArgumentError(
             f"expected a field name or a list of field names, got {fields!r}")
@@ -679,10 +697,11 @@ def _path_keys(fields: Any) -> tuple[str, ...]:
 
 
 def _count(n: Any) -> int:
-    try:
-        return int(n)
-    except (TypeError, ValueError):
-        raise InputArgumentError(f"expected an integer, got {n!r}") from None
+    """A row count: Spark's ``limit``/``offset`` take a Java int."""
+    if isinstance(n, bool) or not isinstance(n, int) or not 0 <= n < 2**31:
+        raise InputArgumentError(
+            f"expected an integer in [0, {2**31 - 1}], got {n!r}")
+    return n
 
 
 def _limit_by_args(args: Any) -> tuple[tuple[str, ...], int, int]:
@@ -692,7 +711,7 @@ def _limit_by_args(args: Any) -> tuple[tuple[str, ...], int, int]:
             "limit_by expects {each: field(s), limit: n[, offset: m]}, "
             f"got {args!r}")
     return (_path_keys(args["each"]), _count(args["limit"]),
-            _count(args.get("offset") or 0))
+            _count(args.get("offset", 0)))
 
 
 #: option name → parser of its raw argument; the parsed value is what the

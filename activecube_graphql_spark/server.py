@@ -203,18 +203,18 @@ def execute(cubes: dict[str, Cube], document: str,
     ``sc.defaultParallelism`` and a one-field document runs entirely on
     the calling thread.
 
-    In-band error surface: the engine's InputArgumentError plus the
-    ValueError/TypeError/AnalysisException classes its option folds and
-    Catalyst analysis raise for bad argument VALUES (e.g. limit: "x" —
-    review r08 finding: a GraphQL string is lexically fine and only
-    fails inside the fold), and the Spark data exceptions (SQLSTATE
-    class 22) that a bad value raises only once its job runs (e.g.
-    shipdate: {gteq: "notadate"} → CAST_INVALID_INPUT). A Spark
-    message is cut before the analyzed plan (it lists the backing
-    table's columns) and the query context (it names server files), and
-    every message is capped, so a JVM analysis trace never ships to a
-    client. Anything else is a genuine server bug and propagates to the
-    transport's 500."""
+    In-band error surface, the three ways a bad request fails:
+    :class:`InputArgumentError`, raised while the document and its
+    values are parsed, before any plan exists (``query.parse_filter``
+    and the option parsers alone decide whether a value is acceptable);
+    ``RecursionError`` from a value nested past the Python stack; and a
+    Spark ``AnalysisException`` or data exception (SQLSTATE class 22,
+    e.g. ``shipdate: {gteq: "notadate"}`` → CAST_INVALID_INPUT, raised
+    only once the job runs). A Spark message is cut before the analyzed
+    plan (it lists the backing table's columns) and the query context
+    (it names server files), and every message is capped, so a JVM
+    trace never ships to a client. Anything else is a genuine server
+    bug and propagates to the transport's 500."""
     from pyspark.errors import AnalysisException, PySparkException
     try:
         ops = parse_operations(document, variables)
@@ -229,13 +229,10 @@ def execute(cubes: dict[str, Cube], document: str,
             [functools.partial(_collect_field, v) for v in compiled],
             [isinstance(v, DataFrame) for v in compiled])
         return {"data": {key: v for (key, _), v in zip(fields, values)}}
-    except RecursionError:
-        # the parser's depth cap bounds document nesting, but a hostile
-        # input could still find an unforeseen recursive corner; a
-        # Python stack blowout is an input problem, not a server bug
+    except RecursionError:  # a value nested past the Python stack
         return {"errors": [{"message": "document too deeply nested"}],
                 "data": None}
-    except (InputArgumentError, ValueError, TypeError) as e:
+    except InputArgumentError as e:
         return _in_band(str(e))
     except PySparkException as e:
         if not (isinstance(e, AnalysisException)
@@ -289,7 +286,7 @@ def wsgi_app(cubes: dict[str, Cube], database: str = "default"):
                     variables is None or isinstance(variables, dict)):
                 raise TypeError("'query' must be a string and "
                                 "'variables' an object")
-        except (ValueError, KeyError, TypeError) as e:
+        except (ValueError, KeyError, TypeError, RecursionError) as e:
             return reply("400 Bad Request",
                          {"errors": [{"message": f"malformed request: {e}"}]})
         return reply("200 OK",

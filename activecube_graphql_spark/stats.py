@@ -22,13 +22,6 @@ class ExecutionStats:
     plan_summary: str              # first physical-plan line
     used_broadcast_join: bool
     headers: dict[str, Any] = field(default_factory=dict)
-    #: SESSION-scoped routing breadcrumbs (latest decision per operator
-    #: across the whole session — see _routing below), snapshotted at
-    #: execute() time for convenience. NOT attribution: an entry may
-    #: describe an operator an earlier, unrelated pipeline ran; per-query
-    #: attribution would need a per-call context this deliberately avoids
-    #: (operators stay plain functions with no threaded context object).
-    routing: dict[str, str] = field(default_factory=dict)
 
 
 # Data-dependent physical routing breadcrumbs. Operators that pick a plan
@@ -52,7 +45,7 @@ def execute(builder, headers: Optional[dict] = None):
     analogue of ``cube_query.stats= / headers= ; cube_query.query``
     (cube_field.rb:49-53)."""
     df = builder.df()
-    rep = builder.chosen_representation()  # from df()'s plan-cache entry
+    rep = builder._cached()[1]  # the plan-cache entry df() used
     t0 = time.perf_counter()
     rows = df.collect()
     wall = time.perf_counter() - t0
@@ -64,5 +57,4 @@ def execute(builder, headers: Optional[dict] = None):
         plan_summary=plan.splitlines()[0] if plan else "",
         used_broadcast_join="BroadcastHashJoin" in plan,
         headers=dict(headers or {}),
-        routing=routing_decisions(),
     )

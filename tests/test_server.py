@@ -117,8 +117,8 @@ def test_wsgi_roundtrip_and_transport_errors(cubes):
         status, out = _post(app, bad)
         assert status.startswith("400"), bad
     # bad argument VALUE inside a lexically-valid document stays
-    # in-band (limit: "x" raises ValueError in the option fold, not
-    # InputArgumentError — review r08)
+    # in-band: the option parser rejects limit: "x" with an
+    # InputArgumentError before any plan is built
     status, out = _post(app, {
         "query": 'query { sales(options: {limit: "x"}) { count } }'})
     assert status.startswith("200") and out["errors"], out
@@ -197,16 +197,108 @@ def test_analysis_errors_carry_no_plan(cubes):
     ("returnflag: {eq: {a: 1}}", ["eq", "mapping"]),
     ("quantity: {in: [[1]]}", ["in", "scalars"]),
     ("any: [{returnflag: {not_ilike: [1]}}]", ["not_ilike", "string"]),
+    ("options: {limit: 3000000000}", ["integer in [0, 2147483647]"]),
+    ("options: {offset: 3000000000}", ["integer in [0, 2147483647]"]),
+    ('options: {limit_by: {each: "returnflag", '
+     "limit: 99999999999999999999}}", ["64-bit"]),
+    ("quantity: 9223372036854775808", ["64-bit"]),
+    ("quantity: {in: [1, 99999999999999999999]}", ["64-bit"]),
+    ("quantity: {between: [1, 99999999999999999999]}", ["64-bit"]),
+    ("options: {limit: $n}", ["64-bit"]),
+    ("quantity: {between: 5}", ["between", "two bounds"]),
+    ("quantity: {between: [1]}", ["between", "two bounds"]),
+    ("quantity: {between: [1, 2, 3]}", ["between", "two bounds"]),
+    ("quantity: {between: [[1], 2]}", ["between", "scalars"]),
+    ("options: {grouping: {mode: sets, sets: 5}}", ["sets"]),
+    ('options: {limit_by: {each: "returnflag", limit: 1, offset: -1}}',
+     ["integer in [0, 2147483647]"]),
+    ("quantity: {eq: [{a: 1}]}", ["eq", "mapping"]),
+    ('returnflag: "\\ud800"', ["not valid Unicode"]),
+    pytest.param("options: {limit: %s}" % ("9" * 5000), ["5000 digits"],
+                 id="limit-of-5000-digits"),
 ])
 def test_bad_value_shapes_are_in_band_input_errors(cubes, args, words):
-    """Value shapes no operator compiles are input errors answered
-    in-band before any plan is built, never a raw Py4JError or Spark
-    runtime error (HTTP 500)."""
+    """Value shapes no operator compiles, integers no Spark literal or
+    row count holds, and strings py4j cannot carry are input errors
+    answered in-band before any plan is built, never a raw Py4JError or
+    Spark runtime error (HTTP 500) nor a Python unpacking message. The
+    request binds ``$n`` for the document that reads it."""
     status, out = _post(wsgi_app(cubes), {
-        "query": "query { sales(%s) { returnflag count } }" % args})
+        "query": "query { sales(%s) { returnflag count } }" % args,
+        "variables": {"n": 10**20}})
     assert status.startswith("200") and out["data"] is None, out
     msg = out["errors"][0]["message"]
     assert all(w in msg for w in words), msg
+    assert not any(w in msg for w in ("Py4J", "unpack", "not iterable")), msg
+
+
+def test_any_argument_value_is_answered(cubes):
+    """Any value under any selector operator, and as any option's
+    argument, is answered by ``execute`` with rows or an in-band error;
+    it never raises, which the transport would turn into an HTTP 500."""
+    from hypothesis import HealthCheck, given, settings, strategies as st
+
+    from activecube_graphql_spark.functions.selector_ops import OPERATORS
+    from activecube_graphql_spark.query import _OPTION_PARSERS
+
+    scalars = st.one_of(
+        st.integers(-2**70, 2**70), st.floats(), st.booleans(), st.none(),
+        st.text(st.characters(exclude_categories=()), max_size=4),
+        st.sampled_from(["returnflag", "count", "R", "1996-01-01", "sets"]))
+
+    def nest(inner):
+        return st.one_of(inner, st.lists(inner, max_size=3),
+                         st.dictionaries(st.text(max_size=4), inner,
+                                         max_size=2))
+    values = nest(nest(nest(scalars)))
+    option_args = st.one_of(
+        values,
+        st.fixed_dictionaries({"each": values, "limit": values},
+                              optional={"offset": values}),
+        st.fixed_dictionaries({"mode": st.sampled_from(
+            ["groupby", "rollup", "cube", "sets"]), "sets": values}))
+    selector_docs = [
+        "query { sales(%s: {%s: $v}) { returnflag count } }" % (sel, op)
+        for sel in ("quantity", "returnflag", "shipdate")
+        for op in sorted(OPERATORS)]
+    option_docs = [
+        "query { sales(options: {%s: $v}) { returnflag count } }" % name
+        for name in sorted(_OPTION_PARSERS) + ["grouping"]]
+
+    @settings(max_examples=500, deadline=None,
+              suppress_health_check=[HealthCheck.too_slow])
+    @given(st.one_of(st.tuples(st.sampled_from(selector_docs), values),
+                     st.tuples(st.sampled_from(option_docs), option_args)))
+    def answered(doc_and_value):
+        doc, value = doc_and_value
+        out = execute(cubes, doc, {"v": value})
+        if out["data"] is None:
+            msg = out["errors"][0]["message"]
+            assert msg and "Py4J" not in msg, msg
+        else:
+            assert "errors" not in out and "sales" in out["data"], out
+
+    answered()
+
+
+def test_execute_has_no_catch_all():
+    """``execute`` answers in-band only the error classes a bad request
+    raises. A handler naming ValueError, TypeError, Exception or
+    BaseException, or a bare ``except:``, would again turn engine bugs
+    into 200s. Reads the source; needs no Spark."""
+    import ast
+    import inspect
+
+    handlers = [n for n in ast.walk(ast.parse(inspect.getsource(execute)))
+                if isinstance(n, ast.ExceptHandler)]
+    assert handlers
+    for h in handlers:
+        assert h.type is not None, "bare except in execute"
+        names = {n.id if isinstance(n, ast.Name) else n.attr
+                 for n in ast.walk(h.type)
+                 if isinstance(n, (ast.Name, ast.Attribute))}
+        assert not names & {"ValueError", "TypeError", "Exception",
+                            "BaseException"}, names
 
 
 # ------------------------------------------------------------ introspection
@@ -343,6 +435,11 @@ def test_transport_hostile_shapes(cubes):
     deep_val = "query { sales(quantity: " + "[" * 500 + "]" * 500 + ") { count } }"
     status, out = _post(app, {"query": deep_val})
     assert status.startswith("200") and out["errors"]
+    # a JSON body nested past the decoder's stack is a malformed request
+    deep_json = (b'{"query": "query { sales { count } }", "variables": '
+                 b'{"a": ' + b"[" * 100_000 + b"]" * 100_000 + b"}}")
+    status, out = _post(app, deep_json)
+    assert status.startswith("400") and out["errors"]
     # oversized body bounced BEFORE the read (413)
     big = {"query": "query { sales { count } } " + "#" + "x" * 11_000_000}
     status, out = _post(app, big)

@@ -259,6 +259,15 @@ def test_injection_guard_applies_to_sql_path(sales):
     {"quantity": {"not_in": [1, {"a": 1}]}},
     {"returnflag": {"like": 5}},
     {"returnflag": {"eq": {"a": 1}}},
+    {"quantity": 2**63},
+    {"quantity": {"in": [1, 10**20]}},
+    {"quantity": {"between": [1, 10**20]}},
+    {"quantity": {"between": 5}},
+    {"quantity": {"between": [1]}},
+    {"quantity": {"between": [1, 2, 3]}},
+    {"quantity": {"between": [[1], 2]}},
+    {"quantity": {"eq": [{"a": 1}]}},
+    {"returnflag": "\ud800"},
 ])
 def test_bad_value_shapes_fail_before_either_path(sales, args):
     """A value shape the Column compiler would reinterpret (``isin``
@@ -270,3 +279,24 @@ def test_bad_value_shapes_fail_before_either_path(sales, args):
         q.when(args)
     with pytest.raises(InputArgumentError):
         q.measure("revenue", where=args)
+
+
+@pytest.mark.parametrize("name, args", [
+    ("limit", 3_000_000_000),
+    ("offset", 3_000_000_000),
+    ("limit", -1),
+    ("limit", float("inf")),
+    ("limit", 10**20),
+    ("limit_by", {"each": "returnflag", "limit": 10**20}),
+    ("limit_by", {"each": "returnflag", "limit": 1, "offset": -1}),
+    ("grouping", {"mode": "sets", "sets": 5}),
+    ("grouping", {"mode": "sets", "sets": "returnflag"}),
+])
+def test_bad_option_values_fail_before_either_path(sales, name, args):
+    """A count outside [0, 2**31 - 1] (Spark's ``limit``/``offset`` take
+    a Java int) and a ``sets`` that is not a list are rejected when the
+    option is parsed, before the engine or the printer reads it."""
+    from activecube_graphql_spark.errors import InputArgumentError
+    q = sales.query().slice("returnflag").measure("count")
+    with pytest.raises(InputArgumentError):
+        q.option(name, args)
